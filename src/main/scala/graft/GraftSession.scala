@@ -32,7 +32,13 @@ final class GraftSession(val spark: SparkSession) {
   def catalog: GraphCatalog = _catalog
 
   private val tables = TrieMap.empty[String, DataFrame]
-  private val adjCache = TrieMap.empty[(String, Boolean), DataFrame]
+  private val adjCache = TrieMap.empty[(String, Boolean), AdjEntry]
+  /** Held by writers only ([[appendTableRows]], [[executeCreate]]): the
+    * table map's read-modify-write (read the frame, union, put) must not
+    * interleave, or concurrent writers each put their own union and all
+    * but the last write are lost. Readers never take it — a read sees
+    * the table map before or after a write, both consistent. */
+  private val writeLock = new Object
   /** Persisted materialization handles for streamed in-memory tables
     * ([[appendEdgeRows]]) — kept so the predecessor can be explicitly
     * unpersisted when a batch replaces it. */
@@ -53,6 +59,17 @@ final class GraftSession(val spark: SparkSession) {
     tableRdds.keys.toSeq.foreach(k => tableRdds.remove(k).foreach(old =>
       try old.unpersist(blocking = false) catch { case _: Exception => }))
     adjCache.clear()
+  }
+
+  /** A memoized adjacency index plus its max out-degree — the largest
+    * `neighbors` array, which bounds one index-backed hop's fan-out in
+    * [[DataFrameBuilder]]'s frontier-first mode. The degree is one aggregate job on the
+    * first anchored read that needs it; it lives and dies with the
+    * entry, so every rebuild or drop of the index also drops it. */
+  private final class AdjEntry(val frame: DataFrame) {
+    lazy val maxDegree: Long =
+      Option(frame.agg(max(size(col("neighbors")))).head().get(0))
+        .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
   }
 
   def registerTable(name: String, df: DataFrame): Unit = {
@@ -121,8 +138,15 @@ final class GraftSession(val spark: SparkSession) {
     * neighbor set). Built lazily, cached MEMORY_AND_DISK; call
     * [[persistAdjIndex]] for the durable bucketed layout. */
   def adjIndex(relLabel: String, outgoing: Boolean): DataFrame =
-    adjCache.getOrElseUpdate((relLabel, outgoing),
-      buildAdjIndex(relLabel, outgoing).persist(StorageLevel.MEMORY_AND_DISK))
+    adjEntry(relLabel, outgoing).frame
+
+  /** Max out-degree of the adjacency index (see [[AdjEntry]]). */
+  private[graft] def adjMaxDegree(relLabel: String, outgoing: Boolean): Long =
+    adjEntry(relLabel, outgoing).maxDegree
+
+  private def adjEntry(relLabel: String, outgoing: Boolean): AdjEntry =
+    adjCache.getOrElseUpdate((relLabel, outgoing), new AdjEntry(
+      buildAdjIndex(relLabel, outgoing).persist(StorageLevel.MEMORY_AND_DISK)))
 
   /** Point this session's adjacency reads at tables previously written by
     * [[persistAdjIndex]] (possibly by another process — the discovery step
@@ -152,8 +176,8 @@ final class GraftSession(val spark: SparkSession) {
       persistAdjIndex(relLabel, buckets, partGroups)
     } else
       for (outgoing <- Seq(true, false))
-        adjCache.put((relLabel, outgoing),
-          spark.table(adjTableName(relLabel, outgoing)).select("id", "neighbors"))
+        adjCache.put((relLabel, outgoing), new AdjEntry(
+          spark.table(adjTableName(relLabel, outgoing)).select("id", "neighbors")))
   }
 
   private val FingerprintProp = "graft.edge.fingerprint"
@@ -221,7 +245,8 @@ final class GraftSession(val spark: SparkSession) {
       spark.sql(s"ALTER TABLE `$name` SET TBLPROPERTIES (" +
         s"'$FingerprintProp' = '$fp', '$BucketsProp' = '$buckets', " +
         s"'$PartGroupsProp' = '$partGroups')")
-      adjCache.put((relLabel, outgoing), spark.table(name).select("id", "neighbors"))
+      adjCache.put((relLabel, outgoing),
+        new AdjEntry(spark.table(name).select("id", "neighbors")))
     }
   }
 
@@ -295,7 +320,8 @@ final class GraftSession(val spark: SparkSession) {
       spark.sql(s"ALTER TABLE `$name` SET TBLPROPERTIES (" +
         s"'$FingerprintProp' = '$fp')")
       spark.catalog.refreshTable(name)
-      adjCache.put((relLabel, outgoing), spark.table(name).select("id", "neighbors"))
+      adjCache.put((relLabel, outgoing),
+        new AdjEntry(spark.table(name).select("id", "neighbors")))
     }
   }
 
@@ -308,7 +334,7 @@ final class GraftSession(val spark: SparkSession) {
   /** Append ROWS to a registered backing table: in-memory frames union
     * (materialized — see the lineage note below); catalog-managed tables
     * append-write. Shared by edge appends and CREATE node inserts. */
-  private def appendTableRows(tableName: String, rows: DataFrame): Unit = {
+  private def appendTableRows(tableName: String, rows: DataFrame): Unit = writeLock.synchronized {
     if (tables.contains(tableName)) {
       val merged = tables(tableName).unionByName(rows)
       // materialize: an accreting lazy union would re-execute every prior
@@ -521,6 +547,13 @@ final class GraftSession(val spark: SparkSession) {
       "CREATE instance inserts are not supported; load data by writing " +
       "to the backing tables (reference parity). This engine can apply " +
       "them as an extension: set spark.graft.writes.enabled=true")
+    // one writer at a time from the endpoint checks to the last append:
+    // the checks read the tables the appends replace
+    writeLock.synchronized { createLocked(cg, params) }
+  }
+
+  private def createLocked(cg: CreateGraphQuery,
+      params: Map[String, Any]): DataFrame = {
     val nodeRows = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Map[String, Any]]]
     val relRows = scala.collection.mutable.LinkedHashMap
@@ -651,10 +684,12 @@ final class GraftSession(val spark: SparkSession) {
               try { java.time.LocalDate.parse(s); true }
               catch { case _: java.time.DateTimeException =>
                 fail(" (expected yyyy-MM-dd)") }
-            case _: TimestampType =>
+            case _: TimestampType | _: TimestampNTZType =>
               // the forms Spark's string->timestamp cast accepts that we
               // can verify exactly on the driver: ISO local (T or space
-              // separated, optional fraction) or a bare date
+              // separated, optional fraction) or a bare date. Parquet
+              // timestamps without a zone read as TIMESTAMP_NTZ, which
+              // casts the same forms
               val iso = s.replaceFirst(" ", "T")
               val okTs =
                 try { java.time.LocalDateTime.parse(iso); true }
@@ -742,7 +777,7 @@ final class GraftSession(val spark: SparkSession) {
       if (persisted) appendEdges(relType, df)
       else for (o <- Seq(true, false))
         adjCache.remove((relType, o)).foreach(f =>
-          try f.unpersist(blocking = false) catch { case _: Exception => })
+          try f.frame.unpersist(blocking = false) catch { case _: Exception => })
     }
 
     import spark.implicits._

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftexec.QualifiedExplode
 
 import graft.GraftSession
 import graft.catalog.RelSchema
@@ -23,6 +24,12 @@ import graft.planner.{GraphPlan, ResolvedEdge, ResolvedNode, ResolvedOptionalBlo
   *  - joins are declared as equi-joins on node-id columns so Catalyst/AQE can
   *    pick broadcast for small dimension nodes and shuffled hash/SMJ + skew
   *    mitigation for large ones;
+  *  - except from a point anchor: Catalyst's estimates cannot see that a
+  *    filtered, exploded frontier is small, so it would broadcast the node
+  *    tables and indexes instead. While the frontier's bound (anchor keys ×
+  *    index max out-degrees × row width) fits the broadcast threshold,
+  *    the frontier is broadcast and the tables stream, and its keys
+  *    pre-filter un-indexed hops ([[buildJoins]]);
   *  - node filters are applied directly above each scan (before any join) so
   *    they reach the parquet reader as PushedFilters;
   *  - the adjacency-index path reads a pre-aggregated, id-partitioned
@@ -36,7 +43,10 @@ final class DataFrameBuilder(
       * semi-joined with the enclosing query's distinct import keys, so a
       * correlated body computes only over keys the outer frame can
       * actually join back (alias → (distinct key frame, key column)). */
-    anchorRestrict: Map[String, (DataFrame, String)] = Map.empty) {
+    anchorRestrict: Map[String, (DataFrame, String)] = Map.empty,
+    /** Frontier-first expansion of point-anchored patterns (see
+      * [[buildJoins]]); off only to compare plans with the plain build. */
+    frontierFirst: Boolean = true) {
 
   import ExprCompiler.compile
 
@@ -217,8 +227,7 @@ final class DataFrameBuilder(
       schemas.map(scanOf(_, fwd, unionCols)).reduce(_ unionByName _)
     }
 
-    val canUseIndex = s.hasAdjIndex && refCols.isEmpty &&
-      e.pushedFilters.isEmpty && e.altSchemas.isEmpty
+    val canUseIndex = indexBacked(e, plan)
 
     // bounded var-length hop: iterated self-join over the single-hop pair
     // set, distinct-pair reachability semantics. Each composition is an
@@ -492,6 +501,23 @@ final class DataFrameBuilder(
     exprs.flatMap(scan).toSet
   }
 
+  /** Whether a hop can read the adjacency index: the relationship has one,
+    * and the query needs nothing of the edge but its endpoints. */
+  private def indexBacked(e: ResolvedEdge, plan: GraphPlan): Boolean =
+    e.schema.hasAdjIndex && e.pushedFilters.isEmpty && e.altSchemas.isEmpty &&
+      plan.referencedProps.getOrElse(e.alias, Set.empty).isEmpty
+
+  /** A fixed-length, directed, index-backed hop: its fan-out from one
+    * endpoint is bounded by the max out-degree of the index keyed on
+    * that endpoint's side. */
+  private def boundedHop(e: ResolvedEdge, plan: GraphPlan): Boolean =
+    e.varLength.isEmpty && !e.invalidDirection && !e.undirectedSameLabel &&
+      indexBacked(e, plan)
+
+  /** The adjacency-index direction keyed on the hop's source endpoint
+    * (`fromSrc`) or on its destination. */
+  private def keyedOn(e: ResolvedEdge, fromSrc: Boolean): Boolean = e.srcIsFrom == fromSrc
+
   /** Pre-aggregated adjacency read: `(id, neighbors)` exploded back to an
     * edge shape — the Spark analogue of
     * `SELECT from_id, arrayJoin(bitmapToArray(to_id))` (reference
@@ -502,40 +528,136 @@ final class DataFrameBuilder(
 
   // ---- joins ---------------------------------------------------------------
 
+  /** Whether `rows` rows of `df`'s schema fit the auto-broadcast threshold
+    * (≤ 0 disables broadcasting, and with it the frontier-first mode). */
+  private def fits(rows: Long, df: DataFrame): Boolean = {
+    val budget = session.spark.sessionState.conf.autoBroadcastJoinThreshold
+    budget > 0 && rows <= budget / math.max(1L, df.schema.defaultSize.toLong)
+  }
+
+  private def fanOut(rows: Long, degree: Long): Long =
+    if (degree == 0 || rows <= Long.MaxValue / degree) rows * degree
+    else Long.MaxValue
+
+  /** Keys a point anchor pins: its pushed filters hold `id = literal` (one)
+    * or `id IN [literals]` (the distinct list size). None otherwise. */
+  private def pointAnchorKeys(plan: GraphPlan): Option[Long] = {
+    val rn = plan.nodes(plan.anchor)
+    val id = Expr.Prop(rn.alias, rn.schema.idColumn)
+    rn.pushedFilters.collect {
+      case Expr.Bin("=", `id`, Expr.Lit(_)) | Expr.Bin("=", Expr.Lit(_), `id`) => 1L
+      case Expr.Bin("IN", `id`, Expr.ListLit(xs)) if xs.forall(_.isInstanceOf[Expr.Lit]) =>
+        xs.distinct.size.toLong
+    }.reduceOption(_ min _)
+  }
+
+  /** `edges` restricted to rows whose `(alias, key)` columns match the ids
+    * of `frontier`: a broadcast left-semi join on the frontier's id
+    * columns, with no DISTINCT (a semi join ignores duplicate keys, and a
+    * DISTINCT would add a shuffle stage). */
+  private def semiOnKeys(edges: DataFrame, frontier: DataFrame,
+      keyed: Seq[(String, Column)], plan: GraphPlan): DataFrame = {
+    val ids = keyed.map { case (a, _) => s"$a.${plan.nodes(a).schema.idColumn}" }
+    val keys = broadcast(frontier.select(ids.distinct.map(col): _*))
+    edges.join(keys, keyed.zip(ids).map { case ((_, k), id) => k === keys.col(id) }
+      .reduce(_ && _), "left_semi")
+  }
+
+  /** The frontier as it stood when each alias was bound, with its row
+    * bound, for aliases bound while the frontier-first mode held. An
+    * OPTIONAL MATCH attached to one of them pre-filters by that frame's
+    * keys: a superset of the final frame's, and bounded, unlike the
+    * final frame's rows once later hops or CALL frames fan it out. */
+  private var frontierAt: Map[String, (DataFrame, Long)] = Map.empty
+
+  /** Without CBO a filter or an explode does not shrink Catalyst's size
+    * estimate, so a point-anchored frontier (one customer, a dozen orders)
+    * looks as large as its tables, every table under the threshold looks
+    * smaller, and Catalyst broadcasts whole node tables and exploded
+    * indexes to expand a handful of rows. Frontier-first mode is the
+    * reference's hop-by-hop pre-filter (`from_id IN (SELECT id FROM
+    * prev_cte)`, then arrayJoin — graph_traversal_planning.rs:199-283):
+    *  - the frontier is the broadcast build side; node tables and the
+    *    unexploded `(id, neighbors)` index stream as the probe side, and
+    *    the explode runs after the index join;
+    *  - an un-indexed hop or cycle-closing edge is first restricted by a
+    *    broadcast left-semi join on the frontier's key set, which Catalyst
+    *    pushes through projections and DISTINCTs into the edge scan.
+    * The mode holds while the frontier has a bound that fits the
+    * broadcast threshold: anchor keys × each index hop's max out-degree,
+    * times the row width. An un-indexed hop has no such bound and ends it
+    * after its pre-filter; later hops join as Catalyst plans them. */
   private def buildJoins(plan: GraphPlan): DataFrame = {
     def idOf(alias: String): Column =
       col(s"$alias.${plan.nodes(alias).schema.idColumn}")
+    def joinNode(df: DataFrame, alias: String, key: Column): DataFrame =
+      df.join(nodeDF(plan.nodes(alias), plan), key === idOf(alias), "inner")
 
     var joined = nodeDF(plan.nodes(plan.anchor), plan)
     val bound = mutable.Set(plan.anchor)
     val pending = mutable.Buffer(plan.edges: _*)
+    // upper bound on `joined`'s rows while the frontier-first mode holds
+    var frontier: Option[Long] =
+      (if (frontierFirst) pointAnchorKeys(plan) else None).filter(fits(_, joined))
+    frontier.foreach(k => frontierAt += plan.anchor -> (joined, k))
 
     while (pending.nonEmpty) {
       val idx = pending.indexWhere(e => bound(e.srcAlias) || bound(e.dstAlias))
       if (idx < 0)
         throw new DisconnectedPatternException("disconnected match patterns")
       val e = pending.remove(idx)
-      val eDF = edgeDF(e, plan)
       val srcKey = col(s"${e.alias}.__src")
       val dstKey = col(s"${e.alias}.__dst")
       val srcBound = bound(e.srcAlias)
       val dstBound = bound(e.dstAlias)
+      frontier = frontier.filter(fits(_, joined))
 
-      if (srcBound && dstBound) {
-        // cycle / standalone-rel: join on both endpoints at once
-        // (reference graph_join_inference.rs:251-256, 350-370)
-        joined = joined.join(eDF,
-          idOf(e.srcAlias) === srcKey && idOf(e.dstAlias) === dstKey, "inner")
-      } else if (srcBound) {
-        joined = joined
-          .join(eDF, idOf(e.srcAlias) === srcKey, "inner")
-          .join(nodeDF(plan.nodes(e.dstAlias), plan), dstKey === idOf(e.dstAlias), "inner")
-        bound += e.dstAlias
-      } else {
-        joined = joined
-          .join(eDF, idOf(e.dstAlias) === dstKey, "inner")
-          .join(nodeDF(plan.nodes(e.srcAlias), plan), srcKey === idOf(e.srcAlias), "inner")
-        bound += e.srcAlias
+      frontier match {
+        case Some(rows) if srcBound != dstBound && boundedHop(e, plan) =>
+          // index hop: frontier ⋈ unexploded index, then explode
+          val (near, far) = if (srcBound) ("__src", "__dst") else ("__dst", "__src")
+          val (from, to) = if (srcBound) (e.srcAlias, e.dstAlias) else (e.dstAlias, e.srcAlias)
+          val outgoing = keyedOn(e, fromSrc = srcBound)
+          val index = session.adjIndex(e.schema.label, outgoing)
+            .select(col("id").as(near), col("neighbors").as("__nbrs")).alias(e.alias)
+          val hopped = QualifiedExplode(
+            broadcast(joined).join(index, idOf(from) === col(s"${e.alias}.$near")),
+            e.alias, "__nbrs", far)
+          val fanned = fanOut(rows, session.adjMaxDegree(e.schema.label, outgoing))
+          joined = joinNode(if (fits(fanned, hopped)) broadcast(hopped) else hopped,
+            to, col(s"${e.alias}.$far"))
+          bound += to
+          frontier = Some(fanned)
+          frontierAt += to -> (joined, fanned)
+
+        case Some(_) =>
+          // un-indexed hop or cycle-closing edge: restrict the edge to the
+          // frontier's keys first; its fan-out is unknown, so the mode ends
+          val keyed = Seq((srcBound, e.srcAlias, srcKey), (dstBound, e.dstAlias, dstKey))
+            .collect { case (true, a, k) => (a, k) }
+          val eDF = semiOnKeys(edgeDF(e, plan), joined, keyed, plan)
+          val onKeys = keyed.map { case (a, k) => idOf(a) === k }.reduce(_ && _)
+          joined = broadcast(joined).join(eDF, onKeys, "inner")
+          if (!srcBound) { joined = joinNode(joined, e.srcAlias, srcKey); bound += e.srcAlias }
+          if (!dstBound) { joined = joinNode(joined, e.dstAlias, dstKey); bound += e.dstAlias }
+          frontier = None
+
+        case None =>
+          val eDF = edgeDF(e, plan)
+          if (srcBound && dstBound) {
+            // cycle / standalone-rel: join on both endpoints at once
+            // (reference graph_join_inference.rs:251-256, 350-370)
+            joined = joined.join(eDF,
+              idOf(e.srcAlias) === srcKey && idOf(e.dstAlias) === dstKey, "inner")
+          } else if (srcBound) {
+            joined = joinNode(joined.join(eDF, idOf(e.srcAlias) === srcKey, "inner"),
+              e.dstAlias, dstKey)
+            bound += e.dstAlias
+          } else {
+            joined = joinNode(joined.join(eDF, idOf(e.dstAlias) === dstKey, "inner"),
+              e.srcAlias, srcKey)
+            bound += e.srcAlias
+          }
       }
     }
     joined
@@ -907,7 +1029,14 @@ final class DataFrameBuilder(
     * scans are inner-joined into a sub-plan; endpoints on already-bound
     * (external) aliases become the ON condition, along with the block's
     * residual WHERE (per Cypher, an optional block's WHERE participates in
-    * matching, never filters preserved rows). */
+    * matching, never filters preserved rows).
+    *
+    * An edge attached to an alias the frontier-first mode bound (see
+    * [[buildJoins]]) is pre-filtered by a broadcast left-semi join on that
+    * alias's keys in the frontier that bound it. When that edge is index-backed the
+    * block's rows are bounded by the keys × the index's max out-degree,
+    * and while they fit the threshold the block is the broadcast side of
+    * its node joins and of the outer join. */
   private def applyOptional(
       main: DataFrame, block: ResolvedOptionalBlock, plan: GraphPlan): DataFrame = {
     def idOf(alias: String): Column =
@@ -915,6 +1044,10 @@ final class DataFrameBuilder(
     val internal = block.internalAliases
 
     var sub: DataFrame = null
+    // upper bound on `sub`'s rows, while one is known
+    var subRows: Option[Long] = None
+    def small(df: DataFrame): DataFrame =
+      if (subRows.exists(fits(_, df))) broadcast(df) else df
     val bound = mutable.Set[String]()
     val external = mutable.ArrayBuffer[Column]()
     val pending = mutable.Buffer(block.edges: _*)
@@ -927,23 +1060,34 @@ final class DataFrameBuilder(
       if (idx < 0)
         throw new GraftException("optional pattern must be connected")
       val e = pending.remove(idx)
-      val eDF = edgeDF(e, plan)
       val endpoints = Seq(
         (e.srcAlias, col(s"${e.alias}.__src")),
         (e.dstAlias, col(s"${e.alias}.__dst")))
+      val onFrontier = endpoints.filter { case (a, _) =>
+        !internal(a) && frontierAt.contains(a) }
+      val eDF = onFrontier.foldLeft(edgeDF(e, plan)) { case (df, (a, key)) =>
+        semiOnKeys(df, frontierAt(a)._1, Seq(a -> key), plan) }
 
-      if (sub == null) sub = eDF
-      else {
+      if (sub == null) {
+        sub = eDF
+        subRows = onFrontier match {
+          case Seq((a, _)) if boundedHop(e, plan) =>
+            Some(fanOut(frontierAt(a)._2, session.adjMaxDegree(e.schema.label,
+              keyedOn(e, fromSrc = a == e.srcAlias))))
+          case _ => None
+        }
+      } else {
         val attach = endpoints.collect {
           case (a, key) if internal(a) && bound(a) => idOf(a) === key
         }
         sub =
           if (attach.nonEmpty) sub.join(eDF, attach.reduce(_ && _), "inner")
           else sub.crossJoin(eDF) // pure-external second component (rare)
+        subRows = None
       }
       for ((a, key) <- endpoints) {
         if (internal(a) && !bound(a)) {
-          sub = sub.join(nodeDF(plan.nodes(a), plan), key === idOf(a), "inner")
+          sub = small(sub).join(nodeDF(plan.nodes(a), plan), key === idOf(a), "inner")
           bound += a
         } else if (!internal(a)) {
           external += (idOf(a) === key)
@@ -953,7 +1097,7 @@ final class DataFrameBuilder(
 
     val conds = external.toSeq ++
       block.residual.map(f => compile(rewriteAliasArgs(f, plan), qualified)).toSeq
-    main.join(sub, conds.reduce(_ && _), "left_outer")
+    main.join(small(sub), conds.reduce(_ && _), "left_outer")
   }
 
   // ---- projection ----------------------------------------------------------

@@ -1124,13 +1124,16 @@ object GraphAlgorithms {
     * every vertex, so small-graph results equal the exact form. Cost is
     * |sources| BFS+sweep passes, NOT all-pairs.
     *
-    * Scale shape: per forward level one frontier⋈edges join + one
-    * map-side-combinable σ sum + one anti-join against the settled set
-    * (frontier-delta, like the shortestPath composition); per backward
-    * level one succ join + one combinable δ sum. Every level frame is
-    * re-based through [[rebaseRows]] — the forward loop references the
-    * growing settled set each level and the loop is count-gated, the
-    * exact shape the rebase exists for. State ≤ |sources|·|V|. */
+    * Scale shape: RDD rounds over the symmetric edge list, hash-
+    * partitioned once (partition count sized by edge count) so every
+    * level join is co-partitioned. Per forward level one frontier⋈edges
+    * join + one map-side-combinable σ sum + one subtractByKey against
+    * the settled set (frontier-delta, like the shortestPath
+    * composition); per backward level one succ join + one join with the
+    * deeper level + one combinable δ sum. Each level RDD is persisted,
+    * localCheckpointed and counted (one job per level), and the
+    * predecessor settled set released; the cached edge copies are the
+    * `sym` frame and its partitioned RDD. State ≤ |sources|·|V|. */
   def betweennessCentrality(gs: GraftSession, relLabel: String,
       sources: Seq[Long] = Nil, maxDepth: Int = 10,
       edgePred: Option[Column] = None, exact: Boolean = false): DataFrame = {
@@ -1205,6 +1208,10 @@ object GraphAlgorithms {
         .map { case (_, ((src, sig), b)) => ((src, b), sig) }
         .reduceByKey(part, _ + _)
       val (nxt, n) = matLevel(expanded.subtractByKey(settled, part))
+      // the first level's join read every symP partition, so symP is
+      // materialized: drop the unpartitioned copy (an evicted symP block
+      // recomputes from the cached `sym` frame through symRdd's lineage)
+      if (depth == 0) symRdd.unpersist(blocking = false)
       if (n == 0) { nxt.unpersist(blocking = false); done = true }
       else {
         val st = trackRdd(settled.union(nxt).partitionBy(part))

@@ -271,11 +271,16 @@ object Sft {
     * packer [[Corpus.packedSequenceIds]], which inserts the artifact's
     * [[Bpe.Eos]] document separator because raw documents have none.
     *
-    * Scale: one narrow encode already on the input, one
-    * per-conversation cumsum window, the packer's distributed
-    * prefix-sum, a |conversations|-row join (broadcastable), and one
-    * posexplode — the corpus-sized data moves exactly once, at the
-    * final explode. */
+    * Scale: one narrow encode already on the input, then one
+    * per-conversation aggregate that collates every turn's (turn_idx,
+    * mask, id array) — a groupBy shuffle carrying the corpus's id
+    * arrays — and the packer's distributed prefix sum, which
+    * range-shuffles those collated rows and persists them
+    * (MEMORY_AND_DISK) for its eager offsets job; the final posexplode
+    * reads the cached arrays. So the corpus-sized data moves twice (the
+    * aggregate and the range shuffle), never through a per-turn join,
+    * and the cache holds the whole tokenized corpus until
+    * `PipelineCaches.clear`, not |conversations| rows of metadata. */
   def packedExamples(turns: DataFrame, seqLen: Int = 2048,
       shards: Int = 8, convIdCol: String = "conv_id",
       idsCol: String = "token_ids"): DataFrame = {

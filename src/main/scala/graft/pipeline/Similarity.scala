@@ -596,7 +596,16 @@ object Similarity {
     * share. Lifecycle: entries evaporate on [[PipelineCaches.clear]],
     * exactly like the persisted frames themselves — nothing survives a
     * bench iteration or server request, every run recomputes from the
-    * parquet inputs. */
+    * parquet inputs.
+    *
+    * Staleness contract: WITHIN one epoch the key is the plan, not the
+    * data. If the table under a plan-identical corpus is overwritten
+    * before the next clear, the memo keeps serving the prep and
+    * centroids of the old contents — the same contract as any persisted
+    * frame, which also keeps its cached blocks. Callers that rewrite an
+    * input mid-epoch must clear first. The centroid train runs inside
+    * `computeIfAbsent`, so a concurrent caller whose key hashes to the
+    * same bin waits for it. */
   private val ivfPrepMemo = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame]()
   private val centroidMemo = new java.util.concurrent.ConcurrentHashMap[

@@ -635,13 +635,20 @@ object TextAnalysis {
     * result is bit-stable across partitionings and engines (full DuckDB
     * oracle, `p_hash_embed`).
     *
-    * Scale notes (100 TB): the token explode feeds ONE map-side-combinable
-    * aggregate keyed (doc, bucket); bucket document-frequency is a ≤`dim`
-    * row broadcast; corpus size N a 1-row broadcast; vector assembly
-    * re-aggregates ndocs·≤dim rows — bounded by OUTPUT size, not corpus
-    * size. No window, no self-join, and the shuffle key is the int bucket,
-    * never a raw vocabulary string — an open web-scale vocabulary adds
-    * zero shuffle width. */
+    * EAGER TRAIN: this call is not lazy. It runs the train half of the
+    * train/apply split ([[hashedTfidfIdf]] + [[hashedTfidfIdfValues]]) —
+    * one corpus pass and a `collect` of `dim` doubles — before it
+    * returns, and only the per-row apply is left in the returned frame. A
+    * caller that builds the frame and never executes it still pays the
+    * corpus pass (the packers' eager-collect pattern).
+    *
+    * Scale notes (100 TB): the train is ONE map-side-combinable
+    * aggregate over the token explode keyed by the int bucket, yielding
+    * ≤`dim` rows plus the corpus size N; the apply is a narrow per-row
+    * projection ([[graft.functions.HashEmbed]]) with the idf vector
+    * riding inside the expression. No window, no self-join, no per-doc re-aggregation, and the
+    * shuffle key is the int bucket, never a raw vocabulary string — an
+    * open web-scale vocabulary adds zero shuffle width. */
   def hashedTfidf(docs: DataFrame, dim: Int = Similarity.DefaultDim,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(dim > 0 && (dim & (dim - 1)) == 0,

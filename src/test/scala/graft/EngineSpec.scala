@@ -1429,4 +1429,30 @@ class EngineSpec extends AnyFunSuite {
       assert(r.getInt(2) == 7)
     }
   }
+
+  test("CREATE into a TIMESTAMP_NTZ column: ISO strings round-trip, garbage is loud") {
+    import spark.implicits._
+    import java.time.LocalDateTime
+    val g = writeGs()
+    // parquet timestamps without a zone read as TIMESTAMP_NTZ (TPC-H's
+    // o_orderdate); a LocalDateTime column has the same type
+    g.registerTable("wticks",
+      Seq((1L, LocalDateTime.parse("2024-01-01T00:00:00"))).toDF("id", "ts"))
+    assert(g.table("wticks").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    g.registerNode("Tick", "wticks", "id")
+    withWrites {
+      val e = intercept[GraftException](g.cypher("CREATE (:Tick {id: 9, ts: 'soon'});"))
+      assert(e.getMessage.contains("yyyy-MM-dd"), e.getMessage)
+      g.cypher("CREATE (:Tick {id: 2, ts: '2024-01-02 03:04:05'}), " +
+        "(:Tick {id: 3, ts: $ts}), (:Tick {id: 4, ts: '1996-07-15'});",
+        Map("ts" -> "1998-08-02T10:20:30.5"))
+      val got = g.cypher("MATCH (t:Tick) WHERE t.id > 1 RETURN t.id AS id, t.ts AS ts;")
+        .collect().map(r => r.getLong(0) -> r.getAs[LocalDateTime](1)).toMap
+      assert(got == Map(
+        2L -> LocalDateTime.parse("2024-01-02T03:04:05"),
+        3L -> LocalDateTime.parse("1998-08-02T10:20:30.5"),
+        4L -> LocalDateTime.parse("1996-07-15T00:00:00")))
+    }
+  }
 }

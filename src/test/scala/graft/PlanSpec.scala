@@ -72,6 +72,37 @@ class PlanSpec extends AnyFunSuite {
     assert(optimized.contains("LocalRelation <empty>") || df.count() == 0, optimized)
   }
 
+  test("anchored read expands frontier-first: Order streams, explode sits above the index join") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val df = gs.cypher(
+      """MATCH (c:Customer {c_custkey: 1})-[:PLACED]->(o:Order)
+        |RETURN o.o_orderkey AS ok, o.o_totalprice AS price;""".stripMargin)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    def orderScans(p: SparkPlan) = p.collect {
+      case f: FileSourceScanExec
+        if f.relation.location.rootPaths.exists(_.getName == "orders.parquet") => f }
+    assert(orderScans(plan).nonEmpty, plan.toString)
+    // the Order table is the probe side: no broadcast carries its scan
+    val ordersBroadcast = plan.collect {
+      case b: BroadcastExchangeExec if orderScans(b).nonEmpty => b }
+    assert(ordersBroadcast.isEmpty, s"the Order table is broadcast:\n$plan")
+    // filter, then explode: the Generate reads the join of the broadcast
+    // anchor with the unexploded index, not the index scan itself
+    val gens = plan.collect { case g: GenerateExec => g }
+    assert(gens.nonEmpty, plan.toString)
+    for (g <- gens)
+      assert(g.child.collect { case j: BroadcastHashJoinExec
+        if j.collect { case s: InMemoryTableScanExec => s }.nonEmpty => j }.nonEmpty,
+        s"explode below the index join:\n$plan")
+  }
+
   test("adjacency-index path reads the cached neighbors table + explode") {
     val plan = formatted(gs.cypher(
       "MATCH (c:Customer)-[:PLACED]->(o:Order) RETURN count(*) AS cnt;"))

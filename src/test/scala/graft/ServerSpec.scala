@@ -246,4 +246,47 @@ class ServerSpec extends AnyFunSuite {
       gs.stopCatalogRefresh()
     }
   }
+
+  test("concurrent CREATEs: every acknowledged write is readable as node and edge") {
+    import spark.implicits._
+    val g = new GraftSession(spark)
+    g.registerTable("wcust", Seq(1L, 2L, 3L).toDF("c_custkey"))
+    g.registerTable("word", Seq((100L, 1L)).toDF("o_orderkey", "o_custkey"))
+    g.registerTable("WPLACED", Seq((1L, 100L)).toDF("from_Customer", "to_Order"))
+    g.registerNode("Customer", "wcust", "c_custkey")
+    g.registerNode("Order", "word", "o_orderkey")
+    g.registerRel("PLACED", "WPLACED", "Customer", "Order", adjIndex = true)
+    // the memoized index exists, so every write must also drop it
+    assert(g.cypher("MATCH (c:Customer)-[:PLACED]->(o:Order) RETURN count(*) AS n;")
+      .collect().head.getLong(0) == 1L)
+    val srv = new QueryServer(g)
+    val port = srv.start()
+    spark.conf.set("spark.graft.writes.enabled", "true")
+    try {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      val keys = (1 to 8).map(i => 200L + i)
+      val acks = Await.result(Future.sequence(keys.map { ok =>
+        Future {
+          val ck = ok % 3 + 1
+          val (c, b) = post(port,
+            s"""{"query": "CREATE (:Order {o_orderkey: $$ok, o_custkey: $$ck}), (:Customer {c_custkey: $$ck})-[:PLACED]->(:Order {o_orderkey: $$ok});",
+               | "parameters": {"ok": $ok, "ck": $ck}}""".stripMargin)
+          assert(c == 200, s"CREATE $ok: $c $b")
+          ok
+        }
+      }), Duration(120, "s"))
+      assert(acks.toSet == keys.toSet)
+      val nodes = longs(g.cypher("MATCH (o:Order) RETURN o.o_orderkey AS k;"))
+      val edges = longs(g.cypher(
+        "MATCH (c:Customer)-[:PLACED]->(o:Order) RETURN o.o_orderkey AS k;"))
+      assert(keys.toSet.diff(nodes).isEmpty, s"lost Order nodes: ${keys.toSet.diff(nodes)}")
+      assert(keys.toSet.diff(edges).isEmpty, s"lost PLACED edges: ${keys.toSet.diff(edges)}")
+    } finally {
+      spark.conf.set("spark.graft.writes.enabled", "false")
+      srv.stop()
+      g.close()
+    }
+  }
 }
