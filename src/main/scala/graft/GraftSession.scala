@@ -65,8 +65,17 @@ final class GraftSession(val spark: SparkSession) {
     * `neighbors` array, which bounds one index-backed hop's fan-out in
     * [[DataFrameBuilder]]'s frontier-first mode. The degree is one aggregate job on the
     * first anchored read that needs it; it lives and dies with the
-    * entry, so every rebuild or drop of the index also drops it. */
-  private final class AdjEntry(val frame: DataFrame) {
+    * entry, so every rebuild or drop of the index also drops it.
+    *
+    * `builtFrom` is the registered edge-table frame a lazily built index
+    * was computed from; [[adjEntry]] rebuilds the entry once that is no
+    * longer the registered frame, so a build that read the table before a
+    * write replaced it can never be served, whichever of the two inserted
+    * its entry last. `None` for indexes whose writers maintain them
+    * (persisted tables, kept current by [[appendEdges]]) and for edge
+    * tables that are not registered frames. */
+  private final class AdjEntry(val frame: DataFrame,
+      val builtFrom: Option[DataFrame] = None) {
     lazy val maxDegree: Long =
       Option(frame.agg(max(size(col("neighbors")))).head().get(0))
         .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
@@ -144,9 +153,25 @@ final class GraftSession(val spark: SparkSession) {
   private[graft] def adjMaxDegree(relLabel: String, outgoing: Boolean): Long =
     adjEntry(relLabel, outgoing).maxDegree
 
-  private def adjEntry(relLabel: String, outgoing: Boolean): AdjEntry =
-    adjCache.getOrElseUpdate((relLabel, outgoing), new AdjEntry(
-      buildAdjIndex(relLabel, outgoing).persist(StorageLevel.MEMORY_AND_DISK)))
+  private def adjEntry(relLabel: String, outgoing: Boolean): AdjEntry = {
+    val key = (relLabel, outgoing)
+    val edgeTable = _catalog.rel(relLabel).tableName
+    def build(): AdjEntry = {
+      val source = tables.get(edgeTable)
+      new AdjEntry(buildAdjIndex(relLabel, outgoing,
+          source.getOrElse(spark.table(edgeTable)))
+        .persist(StorageLevel.MEMORY_AND_DISK), source)
+    }
+    val e = adjCache.getOrElseUpdate(key, build())
+    if (e.builtFrom.forall(f => tables.get(edgeTable).exists(_ eq f))) e
+    else {
+      // drop only the stale entry seen here (a concurrent reader may have
+      // replaced it already), then build from the registered frame
+      if (adjCache.remove(key, e))
+        try e.frame.unpersist(blocking = false) catch { case _: Exception => }
+      adjEntry(relLabel, outgoing)
+    }
+  }
 
   /** Point this session's adjacency reads at tables previously written by
     * [[persistAdjIndex]] (possibly by another process — the discovery step
@@ -190,10 +215,10 @@ final class GraftSession(val spark: SparkSession) {
   private def adjTableName(relLabel: String, outgoing: Boolean): String =
     s"${relLabel.toLowerCase}_${if (outgoing) "outgoing" else "incoming"}"
 
-  private def buildAdjIndex(relLabel: String, outgoing: Boolean): DataFrame = {
+  private def buildAdjIndex(relLabel: String, outgoing: Boolean,
+      edges: DataFrame): DataFrame = {
     val r = _catalog.rel(relLabel)
     val (key, value) = if (outgoing) (r.fromColumn, r.toColumn) else (r.toColumn, r.fromColumn)
-    val edges = table(r.tableName)
     // bigint keys (every TPC-H-style id) aggregate through the Roaring
     // bitmap: compressed buffers + OR-merges where collect_set pays boxed
     // hash-set inserts — the difference IS the power-law hot groups.
@@ -235,7 +260,7 @@ final class GraftSession(val spark: SparkSession) {
         spark.sessionState.conf.warehousePath, name.toLowerCase)
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
-      buildAdjIndex(relLabel, outgoing)
+      buildAdjIndex(relLabel, outgoing, table(_catalog.rel(relLabel).tableName))
         .withColumn("pgrp", pmod(hash(col("id")), lit(partGroups)))
         .write.mode("overwrite")
         .partitionBy("pgrp")
@@ -774,6 +799,9 @@ final class GraftSession(val spark: SparkSession) {
       appendEdgeRows(relType, df)
       val persisted = Seq(true, false).forall(o =>
         spark.catalog.tableExists(adjTableName(relType, o)))
+      // a memoized index over a registered frame rebuilds itself (see
+      // AdjEntry); one over a catalog-managed edge table has no frame to
+      // compare, so it is dropped here
       if (persisted) appendEdges(relType, df)
       else for (o <- Seq(true, false))
         adjCache.remove((relType, o)).foreach(f =>

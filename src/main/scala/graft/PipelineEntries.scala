@@ -2363,8 +2363,8 @@ object PipelineEntries {
     * Spark side's early-exit loop exactly. Rounds are MATERIALIZED:
     * each references its predecessor three times, and DuckDB's default
     * CTE inlining would otherwise expand the base scan 3^rounds times
-    * (observed as fd exhaustion, the same doubling the Spark side's
-    * rebaseRows kills). */
+    * (observed as fd exhaustion — the plan doubling an iterative
+    * DataFrame loop hits, DESIGN.md §7). */
   private def kCoreOracleSql(k: Int = 2, rounds: Int = 8): String = {
     val steps = (1 to rounds).map { i =>
       s"""c$i AS MATERIALIZED (

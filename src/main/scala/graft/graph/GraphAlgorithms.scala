@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
@@ -7,17 +8,30 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.GraftSession
+import graft.catalog.RelSchema
+import graft.pipeline.PipelineCaches
 
-/** Whole-graph analytics over catalog relationships via GraphX — the
-  * complement to the per-query traversal engine (SURVEY.md §1.3: edge-list
-  * DataFrames double as GraphX `Edge` RDD input when global algorithms are
-  * wanted; the reference has no equivalent — ClickHouse can't iterate).
+/** Whole-graph analytics over catalog relationships — the complement to
+  * the per-query traversal engine (SURVEY.md §1.3: edge-list DataFrames
+  * double as graph input when global algorithms are wanted; the
+  * reference has no equivalent — ClickHouse can't iterate). Every
+  * operator takes DataFrames in and returns a DataFrame; vertices come
+  * from the node tables where isolated nodes must keep their identity
+  * (components), from the edge list otherwise.
   *
-  * Scale notes: GraphX partitions edges (EdgePartition2D keeps the
-  * replication factor at O(sqrt(numParts))) and iterates with joins over
-  * partitioned RDDs — the same shuffle discipline the DataFrame engine
-  * uses. Vertices come from the node tables so isolated nodes keep their
-  * identity in component/rank outputs.
+  * Iterative operators run on one of three substrates:
+  *  - GraphX library calls ([[pageRank]], [[connectedComponents]],
+  *    [[triangleCount]], [[shortestPaths]]): Pregel loops over
+  *    EdgePartition2D-partitioned graphs, lineage truncated by Pregel's
+  *    checkpointer (see [[graph]]);
+  *  - GraphX `aggregateMessages` loops advanced by [[advance]]
+  *    (label propagation, HITS, weighted/personalized PageRank,
+  *    eigenvector centrality);
+  *  - RDD rounds through the one round driver, [[Rounds]] (SCC, k-core,
+  *    core numbers, betweenness, Louvain): the partitioner, persistence,
+  *    lineage truncation and round budget are fixed there once.
+  * Non-iterative operators (clustering, link features, modularity,
+  * assortativity, walks) are plain DataFrame plans Catalyst optimizes.
   */
 object GraphAlgorithms {
 
@@ -38,6 +52,108 @@ object GraphAlgorithms {
     }.reduce(_ union _).distinct()
     ids.rdd.map(row => (row.getLong(0), ()))
   }
+
+  /** The relationship's edge table with `edgePred` applied. */
+  private def edgeTable(gs: GraftSession, r: RelSchema,
+      edgePred: Option[Column]): DataFrame =
+    edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
+
+  /** The UNDIRECTED simple graph of `relLabel` as canonical edges
+    * (a, b), a < b: endpoints cast to long, self-loops dropped, parallel
+    * and reversed duplicates collapsed. */
+  private def undirectedEdges(gs: GraftSession, relLabel: String,
+      edgePred: Option[Column]): DataFrame = {
+    val r = gs.catalog.rel(relLabel)
+    val e = edgeTable(gs, r, edgePred)
+      .select(col(r.fromColumn).cast("long").as("a"),
+        col(r.toColumn).cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
+    e.select(least(col("a"), col("b")).as("a"),
+      greatest(col("a"), col("b")).as("b")).distinct()
+  }
+
+  /** Both orientations of every [[undirectedEdges]] edge. */
+  private def symmetric(canon: DataFrame): DataFrame =
+    canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
+
+  /** [[undirectedEdges]] as an RDD of both orientations, keyed by source. */
+  private def symmetricRdd(gs: GraftSession, relLabel: String,
+      edgePred: Option[Column]): RDD[(Long, Long)] = {
+    val spark = gs.spark
+    import spark.implicits._
+    undirectedEdges(gs, relLabel, edgePred).as[(Long, Long)].rdd
+      .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+  }
+
+  /** Persist an RDD MEMORY_AND_DISK and register it with
+    * [[PipelineCaches]], so repeated jobs in one JVM (Bench iterations, a
+    * long-lived server) free it on `clear()`. */
+  private def trackRdd[T](x: RDD[T]): RDD[T] = {
+    val p = x.persist(StorageLevel.MEMORY_AND_DISK)
+    PipelineCaches.onClear(p)(_.unpersist(blocking = false))
+    p
+  }
+
+  /** Edges per partition of an RDD-round loop; see [[Rounds]]. */
+  private val EdgesPerPartition = 50000L
+
+  /** The round driver every RDD-round loop runs through. Pregelix
+    * (VLDB 2014) observes that every vertex program is the same
+    * superstep — a message join against the edge partition, a combine,
+    * a vertex update — so the physical choices are made once, here:
+    *
+    *  - Partitioning: one `HashPartitioner` with a partition per
+    *    [[EdgesPerPartition]] edges of `edges`, capped at
+    *    max(defaultParallelism / 2, 4). Round cost at small scale is task
+    *    scheduling, so a 25-vertex fixture runs one task per stage; a
+    *    large graph reaches the cap. Counting `edges` is the driver's one
+    *    sizing job (it also materializes `edges` when the caller tracked
+    *    it).
+    *  - Persistence: loops persist through [[trackRdd]] and drop a
+    *    predecessor with [[release]] once its successor is materialized.
+    *  - Truncation: [[settle]] `localCheckpoint`s the RDD a round's
+    *    materializing action runs on, so lineage is cut at every action —
+    *    persist alone leaves the dependency chain growing, and Java task
+    *    serialization walks it (the StackOverflowError a deep cascade
+    *    hit before truncation). Rounds built lazily between two actions
+    *    ([[coreNumbers]]' bursts) keep a chain one burst deep. The trade:
+    *    a truncated RDD cannot be recomputed once released, so release
+    *    only what no live RDD still reads.
+    *  - Budget: [[next]] counts rounds and refuses once `budget` are
+    *    spent; each algorithm decides whether that stops or throws. */
+  private final class Rounds(edges: RDD[_], budget: Int) {
+    val edgeCount: Long = edges.count()
+    val part = new HashPartitioner(math.min(
+      math.max(edges.sparkContext.defaultParallelism / 2, 4).toLong,
+      edgeCount / EdgesPerPartition + 1L).toInt)
+    private var done = 0
+    /** Rounds counted so far. */
+    def rounds: Int = done
+    def spent: Boolean = done >= budget
+    /** Count one round; false (and not counted) once the budget is spent. */
+    def next(): Boolean = !spent && { done += 1; true }
+    /** A round's materializing action on a tracked RDD: truncate, then
+      * run `action` — the round's one job. */
+    def settle[T, A](p: RDD[T])(action: RDD[T] => A): A = {
+      p.localCheckpoint()
+      action(p)
+    }
+    /** Track, truncate and count `x`. */
+    def materialize[T](x: RDD[T]): (RDD[T], Long) = {
+      val p = trackRdd(x)
+      (p, settle(p)(_.count()))
+    }
+    def release(xs: RDD[_]*): Unit = xs.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The edges of `edges` (keyed by source, partitioned by `part`) whose
+    * source AND destination are both in `keep`, again partitioned by
+    * source: the vertex-deletion step of SCC's trim and the k-core peel. */
+  private def keepBoth(edges: RDD[(Long, Long)], keep: RDD[(Long, Unit)],
+      part: HashPartitioner): RDD[(Long, Long)] =
+    edges.join(keep, part).map { case (s, (d, _)) => (d, s) }
+      .join(keep, part).map { case (d, (s, _)) => (s, d) }
+      .partitionBy(part)
 
   /** Advance a fixed-iteration `aggregateMessages` loop one round:
     * cache and MATERIALIZE the new graph's vertices AND edges before
@@ -80,7 +196,7 @@ object GraphAlgorithms {
     * repeated jobs in one JVM (Bench iterations, a long-lived server)
     * don't accumulate dead blocks until live caches get evicted. */
   private def tracked[A <: Graph[_, _]](g: A): A = {
-    graft.pipeline.PipelineCaches.onClear(g)(_.unpersist(blocking = false))
+    PipelineCaches.onClear(g)(_.unpersist(blocking = false))
     g
   }
 
@@ -93,6 +209,11 @@ object GraphAlgorithms {
       .vertices.map { case (id, comp) => (id, comp) }
       .toDF("id", "component")
   }
+
+  /** Spark-rounds the last [[stronglyConnectedComponents]] call executed
+    * (trim + color + mark rounds summed) — test probe. */
+  private[graft] val lastSccRounds =
+    new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Strongly connected components of the DIRECTED graph; component id
     * = the minimum vertex id in the SCC, so the output convention
@@ -108,26 +229,19 @@ object GraphAlgorithms {
     * regions are directed rings joined by ONE-WAY bridges, undirected
     * reachability is a single component while SCCs keep one component
     * per ring — mutual reachability only. */
-  /** Spark-rounds the last [[stronglyConnectedComponents]] call executed
-    * (trim + color + mark rounds summed) — test probe. */
-  private[graft] val lastSccRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   def stronglyConnectedComponents(gs: GraftSession, relLabel: String,
       numIter: Int = 10, maxRounds: Int = 4000): DataFrame = {
     require(numIter >= 1, s"numIter must be >= 1, got $numIter")
-    // DataFrame in, RDD rounds inside, DataFrame out — the same substrate
-    // split the repo settled for HITS/PageRank: an SCC round is CHEAP
-    // (one tiny join or two), and a Catalyst round costs ~100 ms of
-    // planning/stage overhead regardless of data size, while an RDD
+    // DataFrame in, RDD rounds inside, DataFrame out: an SCC round is
+    // CHEAP (one tiny join or two), and a Catalyst round costs ~100 ms
+    // of planning/stage overhead regardless of data size, while an RDD
     // round is a plain ~20 ms job. GraphX's own stronglyConnectedComponents
     // is NOT usable: it chains Graph lineage across its hand-rolled trim
     // loop and Pregel runs without truncating, and on a high-diameter
     // graph dies in StackOverflowError at task (de)serialization ~140k
-    // stages in (observed on the sf0.1 PLACED probe). Here every loop
-    // RDD is persisted, the predecessor released, and lineage truncated
-    // via localCheckpoint every [[SccTruncateEvery]] rounds — depth
-    // costs time, not stack.
+    // stages in (observed on the sf0.1 PLACED probe). The rounds run
+    // through [[Rounds]], which truncates lineage at every round's action
+    // — depth costs time, not stack.
     //
     // Algorithm (Orzan-style), per outer iteration:
     //   trim:  drop vertices with no in- or no out-edge to fixpoint —
@@ -144,69 +258,37 @@ object GraphAlgorithms {
     val r = gs.catalog.rel(relLabel)
     val spark = gs.spark
     import spark.implicits._
-    def trackRdd[T](x: RDD[T]): RDD[T] = {
-      val p = x.persist(StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
-      p
-    }
-    var rounds = 0
-    def budget(): Unit = {
-      rounds += 1
-      if (rounds > maxRounds) throw new IllegalStateException(
-        s"stronglyConnectedComponents($relLabel) exceeded $maxRounds " +
-        "rounds (trim cascade or diameter beyond budget); raise " +
-        "maxRounds — refusing to return a partial decomposition")
-    }
-    // periodic physical-lineage truncation: persist alone leaves the
-    // dependency chain growing round over round, and Java task
-    // serialization walks it — truncate every N rounds
-    val SccTruncateEvery = 16
-    def mat[T](x: RDD[T]): (RDD[T], Long) = {
-      val p = trackRdd(x)
-      if (rounds % SccTruncateEvery == 0) p.localCheckpoint()
-      (p, p.count())
-    }
-    var edges: RDD[(Long, Long)] = null
-    var edgeCount = 0L
-    // scale-adaptive round partitioning (guide §2): derive the loop's
-    // partition count from the EDGE COUNT, not the core count. Every
-    // trim/color/mark round schedules tasks per partition across several
-    // stages, so a tiny condensation on the old defaultParallelism/2
-    // default (16 partitions for a 25-vertex fixture) paid ~10× pure
-    // scheduling overhead per round; past ~50k edges/partition the count
-    // climbs back to the old cap and behavior at scale is unchanged.
-    // The count job reads the persisted raw edges that seed the loop.
-    val e0raw = trackRdd(gs.table(r.tableName)
+    val e0 = gs.table(r.tableName)
       .select(col(r.fromColumn).cast("long").as("s"),
         col(r.toColumn).cast("long").as("d"))
       .distinct()
-      .as[(Long, Long)].rdd)
-    val maxParts = math.max(spark.sparkContext.defaultParallelism / 2, 4)
-    val parts = math.max(2,
-      math.min(maxParts, (e0raw.count() / 50000L + 1L).toInt))
-    val part = new org.apache.spark.HashPartitioner(parts)
-    locally {
-      val (p, n) = mat(e0raw.partitionBy(part))
+      .as[(Long, Long)].rdd
+    val d = new Rounds(e0, maxRounds)
+    val part = d.part
+    def budget(): Unit =
+      if (!d.next()) throw new IllegalStateException(
+        s"stronglyConnectedComponents($relLabel) exceeded $maxRounds " +
+        "rounds (trim cascade or diameter beyond budget); raise " +
+        "maxRounds — refusing to return a partial decomposition")
+    // hash-partitioned by source once; the first trim round materializes it
+    var edges = trackRdd(e0.partitionBy(part))
+    var edgeCount = d.edgeCount
+    def replaceEdges(next: RDD[(Long, Long)]): Long = {
+      val (p, n) = d.materialize(next)
+      d.release(edges)
       edges = p; edgeCount = n
-      e0raw.unpersist(blocking = false)
+      n
     }
     def trimToFixpoint(): Unit = {
       var stable = edgeCount == 0
       while (!stable) {
         budget()
-        val keep = edges.keys.distinct(parts).map((_, ()))
-          .join(edges.values.distinct(parts).map((_, ())), part)
-          .mapValues(_ => ())
         // keep = src ∩ dst id sets; vertices outside lose all edges
-        val kept = edges.join(keep, part)
-          .map { case (s, ((d), _)) => (d, s) }
-          .join(keep, part)
-          .map { case (d, (s, _)) => (s, d) }
-          .partitionBy(part)
-        val (p, n) = mat(kept)
-        stable = n == edgeCount
-        edges.unpersist(blocking = false)
-        edges = p; edgeCount = n
+        val keep = edges.keys.distinct().map((_, ()))
+          .join(edges.values.distinct().map((_, ())), part)
+          .mapValues(_ => ())
+        val before = edgeCount
+        stable = replaceEdges(keepBoth(edges, keep, part)) == before
       }
     }
     val assigned = scala.collection.mutable.ArrayBuffer[RDD[(Long, Long)]]()
@@ -218,75 +300,65 @@ object GraphAlgorithms {
         s"numIter = $numIter outer iterations (condensation chain deeper " +
         "than the budget); raise numIter")
       // ---- forward-min coloring to fixpoint --------------------------
-      val verts = trackRdd(edges.flatMap { case (s, d) => Iterator(s, d) }
-        .distinct(parts).map(v => (v, v)).partitionBy(part))
+      val verts = trackRdd(edges.flatMap { case (s, t) => Iterator(s, t) }
+        .distinct().map(v => (v, v)).partitionBy(part))
       var color = verts
-      // the fold below is the materializing action for verts too — a
-      // separate count() was one redundant job per outer iteration
-      var colorTotal = color.values.fold(0L)(_ + _)
+      // ONE action per color round: the fold both materializes the
+      // persisted round and yields the fixpoint detector — colors only
+      // ever decrease under the min-fold, so the value sum is stationary
+      // iff no color moved
+      var colorTotal = d.settle(verts)(_.values.fold(0L)(_ + _))
       var stable = false
       while (!stable) {
         budget()
         val msgs = edges.join(color, part)
-          .map { case (_, (d, c)) => (d, c) }
+          .map { case (_, (t, c)) => (t, c) }
           .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        val next = color.leftOuterJoin(msgs, part)
-          .mapValues { case (c, m) => math.min(c, m.getOrElse(c)) }
-        // ONE action per color round (was two: a materializing count +
-        // this fold — at condensation sizes the round cost IS job
-        // latency). The fold both materializes the persisted round and
-        // yields the fixpoint detector: colors only ever decrease under
-        // the min-fold, so the value sum is stationary iff no color moved.
-        val p = trackRdd(next)
-        if (rounds % SccTruncateEvery == 0) p.localCheckpoint()
-        val nextTotal = p.values.fold(0L)(_ + _)
+        val p = trackRdd(color.leftOuterJoin(msgs, part)
+          .mapValues { case (c, m) => math.min(c, m.getOrElse(c)) })
+        val nextTotal = d.settle(p)(_.values.fold(0L)(_ + _))
         stable = nextTotal == colorTotal
         colorTotal = nextTotal
-        if (!(color eq verts)) color.unpersist(blocking = false)
+        if (!(color eq verts)) d.release(color)
         color = p
       }
       // ---- backward confirm within color ----------------------------
       // reversed same-color edges: the mark wave cannot cross colors
-      val backEdges = trackRdd(edges.join(color, part)
-        .map { case (s, (d, cs)) => (d, (s, cs)) }
+      val (backEdges, _) = d.materialize(edges.join(color, part)
+        .map { case (s, (t, cs)) => (t, (s, cs)) }
         .join(color, part)
-        .flatMap { case (d, ((s, cs), cd)) =>
-          if (cs == cd) Iterator((d, s)) else Iterator.empty }
+        .flatMap { case (t, ((s, cs), ct)) =>
+          if (cs == ct) Iterator((t, s)) else Iterator.empty }
         .partitionBy(part))
-      backEdges.count()
-      var marked = trackRdd(color.filter { case (v, c) => v == c })
-      var markedCount = marked.count()
+      var (marked, markedCount) =
+        d.materialize(color.filter { case (v, c) => v == c })
       stable = false
       while (!stable) {
         budget()
         val wave = backEdges.join(marked, part)
           .map { case (_, (s, c)) => (s, c) }
-        val next = marked.union(wave).reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        val (p, n) = mat(next)
+        val (p, n) = d.materialize(marked.union(wave)
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)))
         stable = n == markedCount
-        marked.unpersist(blocking = false)
+        d.release(marked)
         marked = p; markedCount = n
       }
       assigned += marked
       // remove finalized vertices' edges, re-trim, next outer iteration
-      val remaining = edges
+      replaceEdges(edges
         .leftOuterJoin(marked, part)
-        .flatMap { case (s, (d, m)) =>
-          if (m.isEmpty) Iterator((d, s)) else Iterator.empty }
+        .flatMap { case (s, (t, m)) =>
+          if (m.isEmpty) Iterator((t, s)) else Iterator.empty }
         .leftOuterJoin(marked, part)
-        .flatMap { case (d, (s, m)) =>
-          if (m.isEmpty) Iterator((s, d)) else Iterator.empty }
-        .partitionBy(part)
-      val (p, n) = mat(remaining)
-      edges.unpersist(blocking = false)
-      edges = p; edgeCount = n
-      backEdges.unpersist(blocking = false)
-      if (!(color eq verts)) color.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
+        .flatMap { case (t, (s, m)) =>
+          if (m.isEmpty) Iterator((s, t)) else Iterator.empty }
+        .partitionBy(part))
+      d.release(backEdges, verts)
+      if (!(color eq verts)) d.release(color)
       trimToFixpoint()
       outer += 1
     }
-    lastSccRounds.set(rounds)
+    lastSccRounds.set(d.rounds)
     // vertex universe = both endpoint node tables (isolated vertices kept,
     // matching the GraphX construction); everything not in a nontrivial
     // SCC — isolated, trimmed, or never on an edge — is its own component
@@ -299,19 +371,8 @@ object GraphAlgorithms {
     }
     val nontrivial =
       if (assigned.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("component",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      else spark.createDataset(
-        assigned.reduce(_ union _))(
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong))
-        .toDF("id", "component")
+        Seq.empty[(Long, Long)].toDF("id", "component")
+      else assigned.reduce(_ union _).toDF("id", "component")
     allVerts
       .join(nontrivial.withColumnRenamed("id", "__aid"),
         col("id") === col("__aid"), "left")
@@ -460,16 +521,10 @@ object GraphAlgorithms {
     * counts are a union-all + one map-side-combinable aggregate. */
   def clusteringCoefficient(gs: GraftSession, relLabel: String,
       edgePred: Option[Column] = None): DataFrame = {
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
     // canonical undirected simple edges; read 4x below, so persist
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = undirectedEdges(gs, relLabel, edgePred)
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.pipeline.PipelineCaches.track)
+      .transform(PipelineCaches.track)
     val deg = canon.select(col("a").as("id"))
       .unionAll(canon.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
@@ -506,16 +561,10 @@ object GraphAlgorithms {
     * degree ≥ 2, so 1/ln(deg) never divides by zero. */
   def linkFeatures(gs: GraftSession, relLabel: String,
       edgePred: Option[Column] = None): DataFrame = {
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = undirectedEdges(gs, relLabel, edgePred)
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.pipeline.PipelineCaches.track)
-    val und = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
+      .transform(PipelineCaches.track)
+    val und = symmetric(canon)
     val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
     // wedge join: w is a common neighbor of (pa, pb)
     val wedges = und.select(col("a").as("pa"), col("b").as("w"))
@@ -572,13 +621,7 @@ object GraphAlgorithms {
   def labelPropagation(gs: GraftSession, relLabel: String, iters: Int = 5,
       edgePred: Option[Column] = None, untilStable: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = undirectedEdges(gs, relLabel, edgePred)
     // GraphX aggregateMessages rounds (the g_wpagerank/g_ppr move: the
     // DataFrame form re-planned join+mode+persist per round, and on a
     // real cluster re-shuffled the symmetric edge list each time; here
@@ -747,6 +790,11 @@ object GraphAlgorithms {
   private[graft] val lastLabelPropRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Peel rounds the last [[kCore]] call executed — test probe for the
+    * converged-early exit. */
+  private[graft] val lastKCoreRounds =
+    new java.util.concurrent.atomic.AtomicInteger(0)
+
   /** k-core of the UNDIRECTED simple graph induced by `relLabel`
     * (optionally edge-filtered): repeatedly delete vertices of degree < k
     * until none remain, up to `maxRounds` peel rounds. Returns
@@ -757,62 +805,36 @@ object GraphAlgorithms {
     * the early exit when a round deletes nothing is an optimization, not
     * a semantic change — which keeps the unrolled-CTE DuckDB mirror exact.
     *
-    * Scale shape per round: one map-side-combinable degree aggregate over
-    * the surviving symmetric edge list plus two left-semi joins against
-    * the (≤|V|-row) survivor set — shuffle volume is proportional to the
-    * CURRENT edge count, which only shrinks, and AQE broadcasts the
-    * survivor side once it fits. Because each round references the prior
-    * round's frame TWICE (once per endpoint's semi-join), a plain
-    * DataFrame chain would double Catalyst's logical plan every round —
-    * the classic iterative-plan blow-up — so each round's survivor edge
-    * set is materialized to a persisted RDD and re-based as a fresh scan:
-    * lineage AND plan size stay constant per round, at the cost of one
-    * row-encode pass over the (shrinking) survivors. The materializing
-    * count doubles as the convergence probe; prior rounds' blocks are
-    * freed eagerly. */
+    * Scale shape: RDD rounds through [[Rounds]] over the symmetric edge
+    * list, hash-partitioned by source once. A round is one
+    * degree `reduceByKey` (narrow: the edges are already partitioned by
+    * the key), the keep-set `degree >= k`, and [[keepBoth]] — SCC's trim
+    * step with a different keep-set — so shuffle volume is proportional
+    * to the CURRENT edge count, which only shrinks. The materializing
+    * count is the round's one job and doubles as the convergence probe;
+    * the prior round's edges are released. */
   def kCore(gs: GraftSession, relLabel: String, k: Int, maxRounds: Int = 20,
       edgePred: Option[Column] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-    val start = rebaseRows(
-      canon.unionAll(canon.select(col("b").as("a"), col("a").as("b"))))
-    val (cur, _, _, rounds) = peelToFixpoint(start, k, maxRounds)
-    lastKCoreRounds.set(rounds)
-    cur.groupBy(col("a").as("id")).agg(count(lit(1)).as("degree"))
-  }
-
-  /** The k-core peel loop over a re-based symmetric edge frame: delete
-    * degree-<k vertices round by round until a round removes nothing (or
-    * `maxRounds`). Consumes (and frees) the input's backing RDD as rounds
-    * advance; returns the surviving frame, its RDD, edge count, and the
-    * round count. Shared by [[kCore]] and [[coreNumbers]]. */
-  private def peelToFixpoint(
-      start: (DataFrame, RDD[org.apache.spark.sql.Row], Long),
-      k: Int, maxRounds: Int)
-      : (DataFrame, RDD[org.apache.spark.sql.Row], Long, Int) = {
-    var (cur, curRdd, curEdges) = start
-    var i = 0
-    var stable = curEdges == 0
-    while (i < maxRounds && !stable) {
-      val keep = cur.groupBy("a").agg(count(lit(1)).as("__deg"))
-        .filter(col("__deg") >= k).select(col("a").as("__keep"))
-      val (next, nextRdd, nextEdges) = rebaseRows(cur
-        .join(keep, cur("a") === col("__keep"), "left_semi")
-        .join(keep.withColumnRenamed("__keep", "__keepb"),
-          cur("b") === col("__keepb"), "left_semi"))
-      stable = nextEdges == curEdges
-      curRdd.unpersist(blocking = false)
-      cur = next; curRdd = nextRdd; curEdges = nextEdges
-      i += 1
+    val spark = gs.spark
+    import spark.implicits._
+    val sym = symmetricRdd(gs, relLabel, edgePred)
+    val d = new Rounds(sym, maxRounds)
+    def degrees(e: RDD[(Long, Long)]) =
+      e.mapValues(_ => 1L).reduceByKey(d.part, _ + _)
+    var edges = trackRdd(sym.partitionBy(d.part))
+    var edgeCount = d.edgeCount
+    var stable = edgeCount == 0
+    while (!stable && d.next()) {
+      val keep = degrees(edges).filter(_._2 >= k).mapValues(_ => ())
+      val (next, n) = d.materialize(keepBoth(edges, keep, d.part))
+      stable = n == edgeCount
+      d.release(edges)
+      edges = next; edgeCount = n
     }
-    (cur, curRdd, curEdges, i)
+    lastKCoreRounds.set(d.rounds)
+    degrees(edges).toDF("id", "degree")
   }
 
   /** Rounds the last [[coreNumbers]] call executed — test probe for the
@@ -834,17 +856,16 @@ object GraphAlgorithms {
     * monotone non-increasing and its fixpoint is exactly the coreness.
     * One loop computes EVERY k simultaneously — unlike per-k peeling,
     * whose k=2 pass alone needs one synchronous round per layer of a
-    * chain cascade (the previous implementation capped those rounds and
-    * silently mis-assigned coreness past the cap; this one converges or
-    * throws).
+    * chain cascade (an earlier per-k implementation capped those rounds
+    * and silently mis-assigned coreness past the cap; this one converges
+    * or throws).
     *
-    * Substrate (round 14): DataFrame in, partitioned-RDD rounds inside,
-    * DataFrame out — the same split as [[stronglyConnectedComponents]].
-    * The r12/r13 DataFrame loop was already a delta iteration, but wall
-    * clock was ROUND-COUNT-dominated: ~0.5–0.65 s of Catalyst planning /
-    * stage scheduling per round regardless of data size, × a cascade
-    * depth that GROWS on high-diameter graphs (273 rounds → 164–202 s on
-    * the sf0.1 PLACED probe). An RDD round is a plain ~20 ms job.
+    * Substrate: RDD rounds through [[Rounds]]. An earlier DataFrame loop
+    * was already a delta iteration, but wall clock was
+    * ROUND-COUNT-dominated: ~0.5–0.65 s of Catalyst planning / stage
+    * scheduling per round regardless of data size, × a cascade depth
+    * that GROWS on high-diameter graphs (273 rounds → 164–202 s on the
+    * sf0.1 PLACED probe). An RDD round is a plain ~20 ms job.
     *
     * State: each vertex keeps (c, HISTOGRAM of its neighbors' values
     * capped at maxK) — maxK+1 longs, the Montresor "estimate cache"
@@ -857,29 +878,20 @@ object GraphAlgorithms {
     * frontier-proportional; edges never re-shuffle (hash-co-partitioned
     * with the frontier once); the state pass is O(|V|/parts) per
     * partition. Values are integers that never increase, so an empty
-    * frontier ⟺ fixpoint. Lineage is truncated via localCheckpoint every
-    * [[SccTruncateEvery]]-style interval, so deep cascades cost time,
-    * not stack. */
+    * frontier ⟺ fixpoint. Rounds run in bursts between convergence
+    * counts, and the driver truncates lineage at each count, so deep
+    * cascades cost time, not stack. */
   def coreNumbers(gs: GraftSession, relLabel: String, maxK: Int = 64,
       maxRounds: Int = 500, edgePred: Option[Column] = None): DataFrame = {
     require(maxK >= 1, s"maxK must be >= 1, got $maxK")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
     val spark = gs.spark
     import spark.implicits._
-    val parts = math.max(spark.sparkContext.defaultParallelism / 2, 4)
-    val part = new org.apache.spark.HashPartitioner(parts)
-    def trackRdd[T](x: RDD[T]): RDD[T] = {
-      val p = x.persist(StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
-      p
-    }
+    val sym = symmetricRdd(gs, relLabel, edgePred)
+    val d = new Rounds(sym, maxRounds)
+    if (d.edgeCount == 0)
+      return Seq.empty[(Long, Long)].toDF("id", "coreness")
+    val part = d.part
     val K = maxK
     // largest t in 0..K with (count of neighbor values >= t) >= t: one
     // descending pass accumulating the suffix sum of the capped histogram
@@ -895,23 +907,12 @@ object GraphAlgorithms {
     def cap(c: Long): Int = if (c >= K) K else c.toInt
     // symmetric edge list, hash-partitioned ONCE on the source vertex —
     // every later frontier join and delta shuffle reuses this partitioner
-    val edges = trackRdd(
-      canon.select(col("a"), col("b")).as[(Long, Long)].rdd
-        .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-        .partitionBy(part))
-    if (edges.isEmpty())
-      return gs.spark.createDataFrame(
-        gs.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("coreness",
-            org.apache.spark.sql.types.LongType, nullable = false))))
+    val edges = trackRdd(sym.partitionBy(part))
     // c0 = min(degree, maxK); initial neighbor-value histograms in one
     // |E| pass (the only full-edge aggregate of the run), map-side
     // combined so hub in-deltas reduce before the shuffle
     val c0 = trackRdd(edges.mapValues(_ => 1L).reduceByKey(part, _ + _)
-      .mapValues(d => math.min(d, K.toLong)))
+      .mapValues(deg => math.min(deg, K.toLong)))
     val hist0 = edges.join(c0)
       .map { case (_, (b, ca)) => (b, cap(ca)) }
       .aggregateByKey(null: Array[Long], part)(
@@ -922,10 +923,10 @@ object GraphAlgorithms {
     // vertex as this round's frontier. The init sweep is round 1.
     var state = trackRdd(c0.join(hist0).mapValues { case (c, h) =>
       (math.min(c, hIndexOf(h)), c, h) })
-    state.localCheckpoint()
-    var frontierCount =
-      state.filter { case (_, (c, prev, _)) => prev > c }.count()
-    var round = 1
+    d.next()
+    def frontierCount(): Long =
+      d.settle(state)(_.filter { case (_, (c, prev, _)) => prev > c }.count())
+    var remaining = frontierCount()
     // BURST execution: rounds are built lazily (each round's state still
     // persists — the diamond of frontier + join consumers would otherwise
     // recompute exponentially) and only every CheckEvery-th round runs a
@@ -937,9 +938,9 @@ object GraphAlgorithms {
     // of empty-frontier stages.
     val CheckEvery = 8
     val pending = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    while (frontierCount > 0 && round < maxRounds) {
-      var b = math.min(CheckEvery, maxRounds - round)
-      while (b > 0) {
+    while (remaining > 0 && !d.spent) {
+      var b = CheckEvery
+      while (b > 0 && d.next()) {
         // DELTA round, all co-partitioned on `part` (edges never move):
         // changed vertices broadcast (old, new) along their edges; deltas
         // combine into one bounded K+1 histogram patch per receiver; the
@@ -966,8 +967,8 @@ object GraphAlgorithms {
           }
         }
           .aggregateByKey(null: Array[Long], part)(
-            (h, d) => { val a = if (h == null) new Array[Long](K + 1) else h
-              a(d._1) -= 1; a(d._2) += 1; a },
+            (h, on) => { val a = if (h == null) new Array[Long](K + 1) else h
+              a(on._1) -= 1; a(on._2) += 1; a },
             (x, y) => { var i = 0; while (i <= K) { x(i) += y(i); i += 1 }
               x })
         // copy-on-write: untouched vertices carry their histogram
@@ -976,66 +977,28 @@ object GraphAlgorithms {
         // round's cached blocks
         val next = trackRdd(state.leftOuterJoin(deltas).mapValues {
           case ((c, _, h), None) => (c, c, h)
-          case ((c, _, h), Some(d)) =>
+          case ((c, _, h), Some(patch)) =>
             val h2 = java.util.Arrays.copyOf(h, K + 1)
             var i = 0
-            while (i <= K) { h2(i) += d(i); i += 1 }
+            while (i <= K) { h2(i) += patch(i); i += 1 }
             (math.min(c, hIndexOf(h2)), c, h2)
         })
         pending += state
         state = next
-        round += 1; b -= 1
+        b -= 1
       }
-      // one physical-lineage truncation + one convergence job per burst
-      state.localCheckpoint()
-      frontierCount = state.filter { case (_, (c, p, _)) => p > c }.count()
-      pending.foreach(_.unpersist(blocking = false))
+      // one truncation + one convergence job per burst
+      remaining = frontierCount()
+      d.release(pending.toSeq: _*)
       pending.clear()
     }
-    lastCorenessRounds.set(round)
-    if (frontierCount > 0)
+    lastCorenessRounds.set(d.rounds)
+    if (remaining > 0)
       throw new IllegalStateException(
         s"coreNumbers($relLabel) did not converge within $maxRounds " +
         s"rounds (cascade depth exceeds the budget); raise maxRounds — " +
         s"refusing to return a partially-refined decomposition")
     state.map { case (id, (c, _, _)) => (id, c) }.toDF("id", "coreness")
-  }
-
-  /** Peel rounds the last [[kCore]] call executed — test probe for the
-    * converged-early exit. */
-  private[graft] val lastKCoreRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Materialize `df` into a persisted RDD[Row] and re-base it as a fresh
-    * LogicalRDD scan — the plan-truncation step every round-based loop
-    * here runs once per round. Persist+count alone is NOT enough for
-    * iterative DataFrames: the logical plan keeps nesting round over
-    * round, and Catalyst's per-job planning over the growing
-    * cached-plan chain turns superlinear (measured ~4× slower per round
-    * on a 25-vertex HITS before this — the classic iterative-lineage
-    * trap). The RDD hop costs one row-encode pass over the frame and
-    * keeps lineage, plan size, and planning time constant per round.
-    * The RDD is registered for [[graft.pipeline.PipelineCaches]] cleanup;
-    * the returned count doubles as the eager materialization barrier.
-    *
-    * `localCheckpoint` is what makes the truncation REAL: createDataFrame
-    * resets the logical plan, but without it the new RDD still references
-    * the previous round's RDD through its dependency chain, and Java task
-    * serialization walks that whole object graph — a loop that rebases
-    * hundreds of times (deep peel cascades, long BFS frontiers) dies in
-    * StackOverflowError at stage submission even though every hop is
-    * persisted (observed: coreNumbers on the sf0.01 PLACED probe graph).
-    * The trade is the standard iterative-graph one: a truncated RDD
-    * cannot be recomputed if an executor holding its only copy dies —
-    * MEMORY_AND_DISK keeps a disk copy per executor, and these loops
-    * re-run from the query anyway on failure. */
-  private def rebaseRows(df: DataFrame)
-      : (DataFrame, RDD[org.apache.spark.sql.Row], Long) = {
-    val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.localCheckpoint()
-    graft.pipeline.PipelineCaches.onClear(rdd)(_.unpersist(blocking = false))
-    val n = rdd.count()
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd, n)
   }
 
   /** HITS hubs/authorities over the DIRECTED simple graph induced by
@@ -1067,8 +1030,7 @@ object GraphAlgorithms {
     val spark = gs.spark
     import spark.implicits._
     val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
+    val e = edgeTable(gs, r, edgePred).select(col(r.fromColumn).cast("long").as("f"),
       col(r.toColumn).cast("long").as("t"))
     // loud, like weightedPageRank: a NULL (or non-castable) endpoint has
     // no vertex identity, and getLong below would NPE inside a task
@@ -1124,16 +1086,18 @@ object GraphAlgorithms {
     * every vertex, so small-graph results equal the exact form. Cost is
     * |sources| BFS+sweep passes, NOT all-pairs.
     *
-    * Scale shape: RDD rounds over the symmetric edge list, hash-
-    * partitioned once (partition count sized by edge count) so every
-    * level join is co-partitioned. Per forward level one frontier⋈edges
-    * join + one map-side-combinable σ sum + one subtractByKey against
-    * the settled set (frontier-delta, like the shortestPath
-    * composition); per backward level one succ join + one join with the
-    * deeper level + one combinable δ sum. Each level RDD is persisted,
-    * localCheckpointed and counted (one job per level), and the
-    * predecessor settled set released; the cached edge copies are the
-    * `sym` frame and its partitioned RDD. State ≤ |sources|·|V|. */
+    * Scale shape: RDD rounds through [[Rounds]] over the symmetric edge
+    * list, hash-partitioned once so every level join is co-partitioned.
+    * Per forward level one frontier⋈edges join + one map-side-combinable
+    * σ sum + one subtractByKey against the settled set (frontier-delta,
+    * like the shortestPath composition); per backward level one succ
+    * join + one join with the deeper level + one combinable δ sum. Each
+    * level RDD is materialized by the driver (one job per level), and
+    * the predecessor settled set released; the cached edge copies are
+    * the `sym` frame and its partitioned RDD. State ≤ |sources|·|V|.
+    * σ sums are integer-valued doubles (exact under any combine order);
+    * δ sums are unordered float adds nine orders below the 6-dp
+    * rounding quantum. */
   def betweennessCentrality(gs: GraftSession, relLabel: String,
       sources: Seq[Long] = Nil, maxDepth: Int = 10,
       edgePred: Option[Column] = None, exact: Boolean = false): DataFrame = {
@@ -1143,19 +1107,12 @@ object GraphAlgorithms {
       "with an explicit sources list")
     val spark = gs.spark
     import spark.implicits._
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-    val sym = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
+    val sym = symmetric(undirectedEdges(gs, relLabel, edgePred))
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.pipeline.PipelineCaches.track)
+      .transform(PipelineCaches.track)
     val v = sym.select(col("a").as("id")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.pipeline.PipelineCaches.track)
+      .transform(PipelineCaches.track)
     val srcFrame =
       if (sources.nonEmpty) sources.toDF("src")
       else if (exact) v.select(col("id").as("src"))
@@ -1163,70 +1120,38 @@ object GraphAlgorithms {
       // the vertex set, never an all-vertices O(V·E) schedule by accident
       else v.orderBy(col("id")).limit(64).select(col("id").as("src"))
 
-    // ---- RDD rounds (r18) -------------------------------------------------
-    // The sweeps used to run as per-level DataFrame plans re-based through
-    // rebaseRows — 2 planned jobs per forward level + 1 per backward level,
-    // each paying Catalyst planning + codegen + 32-partition stages for
-    // level frames of |sources|·|V| rows at most. The HITS/Louvain/SCC
-    // rationale applies unchanged: a round-based algorithm wants RDD
-    // rounds (~tens of ms) — and the arithmetic is the same: σ sums are
-    // integer-valued doubles (exact under any combine order), δ sums are
-    // the same unordered float adds the DataFrame sum() performed, nine
-    // orders below the 6-dp rounding quantum. Partitioning is sized to
-    // the edge count (the SCC rule); every level RDD is persisted,
-    // lineage-truncated, and the predecessor released.
-    def trackRdd[T](x: RDD[T]): RDD[T] = {
-      val p = x.persist(StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
-      p
-    }
-    val symRdd = trackRdd(sym.as[(Long, Long)].rdd)
-    val parts = math.max(1, math.min(
-      math.max(spark.sparkContext.defaultParallelism / 2, 4),
-      (symRdd.count() / 50000L + 1L).toInt))
-    val part = new org.apache.spark.HashPartitioner(parts)
+    val symRdd = sym.as[(Long, Long)].rdd
+    val d = new Rounds(symRdd, maxDepth)
+    val part = d.part
     val symP = trackRdd(symRdd.partitionBy(part))
 
     // ---- forward: per-level ((src, v) -> sigma) RDDs ----------------------
-    def matLevel(x: RDD[((Long, Long), Double)])
-        : (RDD[((Long, Long), Double)], Long) = {
-      val p = trackRdd(x.partitionBy(part))
-      p.localCheckpoint()
-      (p, p.count())
-    }
-    val (lev0, _) = matLevel(
-      srcFrame.as[Long].rdd.map(s => ((s, s), 1.0)))
+    val (lev0, _) = d.materialize(
+      srcFrame.as[Long].rdd.map(s => ((s, s), 1.0)).partitionBy(part))
     var settled = lev0
     val levels = scala.collection.mutable.ArrayBuffer(lev0)
     var frontier = lev0
-    var depth = 0
     var done = false
-    while (depth < maxDepth && !done) {
+    while (!done && d.next()) {
       val expanded = frontier
         .map { case ((src, vv), sig) => (vv, (src, sig)) }
         .join(symP, part)
         .map { case (_, ((src, sig), b)) => ((src, b), sig) }
         .reduceByKey(part, _ + _)
-      val (nxt, n) = matLevel(expanded.subtractByKey(settled, part))
-      // the first level's join read every symP partition, so symP is
-      // materialized: drop the unpartitioned copy (an evicted symP block
-      // recomputes from the cached `sym` frame through symRdd's lineage)
-      if (depth == 0) symRdd.unpersist(blocking = false)
-      if (n == 0) { nxt.unpersist(blocking = false); done = true }
+      val (nxt, n) =
+        d.materialize(expanded.subtractByKey(settled, part).partitionBy(part))
+      if (n == 0) { d.release(nxt); done = true }
       else {
-        val st = trackRdd(settled.union(nxt).partitionBy(part))
-        st.localCheckpoint()
-        st.count()
+        val (st, _) = d.materialize(settled.union(nxt).partitionBy(part))
         // level 0 IS the first settled, which the backward sweep still
-        // reads — never unpersist an RDD that lives on in `levels`
-        if (!(settled eq lev0)) settled.unpersist(blocking = false)
+        // reads — never release an RDD that lives on in `levels`
+        if (!(settled eq lev0)) d.release(settled)
         settled = st
         levels += nxt
         frontier = nxt
-        depth += 1
       }
     }
-    if (!(settled eq lev0)) settled.unpersist(blocking = false)
+    if (!(settled eq lev0)) d.release(settled)
 
     // ---- backward: dependency accumulation, deepest level first ----------
     // deeper: (src, v) -> (sigma, delta)
@@ -1245,26 +1170,20 @@ object GraphAlgorithms {
         .map { case ((src, _), ((vv, sig), (dsig, ddel))) =>
           ((src, vv), sig / dsig * (1.0 + ddel)) }
         .reduceByKey(part, _ + _)
-      val d = trackRdd(cur.leftOuterJoin(contrib, part)
+      val (dep, _) = d.materialize(cur.leftOuterJoin(contrib, part)
         .mapValues { case (sig, c) => (sig, c.getOrElse(0.0)) })
-      d.localCheckpoint()
-      d.count()
-      // deeper is NOT unpersisted here: perSourceDeps holds a map() view
-      // of it, and a localCheckpointed RDD is unrecomputable once its
-      // blocks are dropped — PipelineCaches.clear frees the whole chain
+      // deeper is NOT released here: perSourceDeps holds a map() view
+      // of it, and a truncated RDD is unrecomputable once its blocks are
+      // dropped — PipelineCaches.clear frees the whole chain
       if (l > 0)
-        perSourceDeps += d.map { case ((_, vv), (_, del)) => (vv, del) }
-      deeper = d
+        perSourceDeps += dep.map { case ((_, vv), (_, del)) => (vv, del) }
+      deeper = dep
     }
 
     val acc =
       if (perSourceDeps.isEmpty)
         v.select(col("id"), lit(0.0).as("betweenness"))
-      else spark.createDataset(
-          perSourceDeps.reduce(_ union _).reduceByKey(part, _ + _))(
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaDouble))
+      else perSourceDeps.reduce(_ union _).reduceByKey(part, _ + _)
         .toDF("id", "betweenness")
     v.join(acc.withColumnRenamed("id", "__bid"),
         col("id") === col("__bid"), "left")
@@ -1298,8 +1217,7 @@ object GraphAlgorithms {
     val spark = gs.spark
     import spark.implicits._
     val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
+    val e = edgeTable(gs, r, edgePred).select(col(r.fromColumn).cast("long").as("f"),
         col(r.toColumn).cast("long").as("t"),
         col(weightCol).cast("double").as("w"))
     // NULL endpoints fail loudly too: the Edge RDD below calls getLong,
@@ -1345,14 +1263,8 @@ object GraphAlgorithms {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = gs.spark
     import spark.implicits._
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-    val sym = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
+    val canon = undirectedEdges(gs, relLabel, edgePred)
+    val sym = symmetric(canon)
     val edgeRdd = sym.rdd.map(row => Edge(row.getLong(0), row.getLong(1), ()))
     var g = tracked(Graph.fromEdges(edgeRdd, 1.0,
       StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK))
@@ -1412,8 +1324,7 @@ object GraphAlgorithms {
     require(seed >= 0, s"seed must be >= 0, got $seed (the step mix " +
       "requires non-negative operands so % agrees across engines)")
     val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
+    val e = edgeTable(gs, r, edgePred).select(col(r.fromColumn).cast("long").as("f"),
         col(r.toColumn).cast("long").as("t"))
       .distinct()
     val adj = e
@@ -1425,7 +1336,7 @@ object GraphAlgorithms {
       // both windows share the partitionBy(f) exchange, so the cached
       // frame is already hash-partitioned on the join key
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.pipeline.PipelineCaches.track)
+      .transform(PipelineCaches.track)
     val v = e.select(col("f").as("id")).union(e.select(col("t").as("id")))
       .distinct()
     var frontier = v
@@ -1483,8 +1394,7 @@ object GraphAlgorithms {
     val spark = gs.spark
     import spark.implicits._
     val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
+    val e = edgeTable(gs, r, edgePred).select(col(r.fromColumn).cast("long").as("f"),
         col(r.toColumn).cast("long").as("t"))
       .distinct()
     val eShare = e.join(e.groupBy(col("f").as("__df"))
@@ -1541,12 +1451,11 @@ object GraphAlgorithms {
     require(seed >= 0, s"seed must be >= 0, got $seed")
     require(p > 0 && q > 0, s"p and q must be > 0, got p=$p q=$q")
     val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e = base.select(col(r.fromColumn).cast("long").as("f"),
+    val e = edgeTable(gs, r, edgePred).select(col(r.fromColumn).cast("long").as("f"),
         col(r.toColumn).cast("long").as("t"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.pipeline.PipelineCaches.track)
+      .transform(PipelineCaches.track)
     val adj = e
       .withColumn("idx", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -1554,7 +1463,7 @@ object GraphAlgorithms {
       .withColumn("deg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("f")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.pipeline.PipelineCaches.track)
+      .transform(PipelineCaches.track)
     val v = e.select(col("f").as("id")).union(e.select(col("t").as("id")))
       .distinct()
 
@@ -1623,15 +1532,9 @@ object GraphAlgorithms {
     * shape) — no window, no driver collect. */
   def modularity(gs: GraftSession, relLabel: String, communities: DataFrame,
       edgePred: Option[Column] = None): DataFrame = {
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val canon = undirectedEdges(gs, relLabel, edgePred)
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.pipeline.PipelineCaches.track)
+      .transform(PipelineCaches.track)
     val lab = communities.select(col("id").cast("long").as("__lid"),
       col("label").cast("long").as("__lab"))
     val labeled = canon
@@ -1671,16 +1574,10 @@ object GraphAlgorithms {
     * aggregate, all map-side combinable. */
   def assortativity(gs: GraftSession, relLabel: String,
       edgePred: Option[Column] = None): DataFrame = {
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    val canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-    val sym = canon.unionAll(canon.select(col("b").as("a"), col("a").as("b")))
+    val canon = undirectedEdges(gs, relLabel, edgePred)
+    val sym = symmetric(canon)
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.pipeline.PipelineCaches.track)
+      .transform(PipelineCaches.track)
     val deg = sym.groupBy(col("a").as("__d_id"))
       .agg(count(lit(1)).cast("double").as("__deg"))
     val pairs = sym
@@ -1739,9 +1636,10 @@ object GraphAlgorithms {
     * `reduceByKey` fed by a NARROW join against the pre-partitioned
     * symmetric edge RDD (see [[louvainLocalMoving]] for why the rounds
     * run on RDD primitives); volumes/strengths are |V|-row reduces and
-    * the global weight is one driver long. Round state is persisted,
-    * materialized, and the prior round freed, so lineage stays flat.
-    * Contraction is one groupBy over the current edge list; coarse
+    * the global weight is one driver long. Each level runs its rounds
+    * through its own [[Rounds]] driver, sized by that level's edge
+    * count. Contraction is one `reduceByKey` over the relabeled edge
+    * list and the level compose one join, both RDD operations; coarse
     * levels shrink geometrically, so the total cost is dominated by
     * level 0, exactly the published behavior.
     *
@@ -1752,86 +1650,58 @@ object GraphAlgorithms {
       levels: Int = 1, edgePred: Option[Column] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(levels >= 1, s"levels must be >= 1, got $levels")
-    val r = gs.catalog.rel(relLabel)
-    val base = edgePred.foldLeft(gs.table(r.tableName))(_ filter _)
-    val e0 = base.select(col(r.fromColumn).cast("long").as("a"),
-        col(r.toColumn).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    var canon = e0.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-      .withColumn("w", lit(1L))
-    var mapping: DataFrame = null
-    var level = 0
-    while (level < levels) {
-      val labels = louvainLocalMoving(canon, rounds)
+    val spark = gs.spark
+    import spark.implicits._
+    // weighted canonical edges (a, b, w), a <= b; a = b rows are
+    // self-loops carrying contracted internal weight. Persisted: the
+    // level's self and cross branches both read it
+    var edges = trackRdd(undirectedEdges(gs, relLabel, edgePred)
+      .as[(Long, Long)].rdd.map { case (a, b) => (a, b, 1L) })
+    var mapping: RDD[(Long, Long)] = null
+    for (level <- 0 until levels) {
+      val d = new Rounds(edges, rounds)
+      val labels = louvainLocalMoving(edges, d)
+      // compose: original id -> previous community -> this level's label
       mapping =
-        if (mapping == null) labels.select(col("id"), col("c").as("community"))
-        else rebaseRows(mapping
-          .join(labels.select(col("id").as("__cid"), col("c").as("__cnew")),
-            col("community") === col("__cid"))
-          .select(col("id"), col("__cnew").as("community")))._1
+        if (mapping == null) labels
+        else mapping.map(_.swap).join(labels, d.part).values
       if (level < levels - 1) {
-        // contract: endpoints → communities; least/greatest folds internal
+        // contract: endpoints → communities; min/max folds internal
         // edges (and prior self-loops) into community self-loops whose
-        // weight keeps vol(c) invariant across the level change. Re-based
-        // to a fresh scan so level l+1's round plans don't nest level l's.
-        val lab = labels.select(col("id").as("__lid"), col("c").as("__lc"))
-        canon = rebaseRows(canon
-          .join(lab.withColumnRenamed("__lid", "__la"), col("a") === col("__la"))
-          .withColumnRenamed("__lc", "__ca")
-          .join(lab.withColumnRenamed("__lid", "__lb")
-            .withColumnRenamed("__lc", "__cb"), col("b") === col("__lb"))
-          .select(least(col("__ca"), col("__cb")).as("a"),
-            greatest(col("__ca"), col("__cb")).as("b"), col("w"))
-          .groupBy("a", "b").agg(sum("w").as("w")))._1
+        // weight keeps vol(c) invariant across the level change
+        edges = trackRdd(edges.map { case (a, b, w) => (a, (b, w)) }
+          .join(labels, d.part)
+          .map { case (_, ((b, w), ca)) => (b, (ca, w)) }
+          .join(labels, d.part)
+          .map { case (_, ((ca, w), cb)) =>
+            ((math.min(ca, cb), math.max(ca, cb)), w) }
+          .reduceByKey(d.part, _ + _)
+          .map { case ((a, b), w) => (a, b, w) })
       }
-      level += 1
     }
-    mapping
+    mapping.toDF("id", "community")
   }
 
-  /** One Louvain level: `rounds` synchronous bit-staggered local-move
-    * rounds over a weighted canonical edge list (a ≤ b; a = b rows are
-    * self-loops carrying contracted internal weight). Returns (id, c).
+  /** One Louvain level: synchronous bit-staggered local-move rounds —
+    * as many as `d`'s budget — over a weighted canonical edge list
+    * (a ≤ b; a = b rows are self-loops carrying contracted internal
+    * weight). Returns (id, c), partitioned by `d.part`.
     *
     * The rounds run on RDD `reduceByKey`/`join` primitives rather than
     * per-round DataFrame plans — the HITS rationale: a Catalyst plan per
     * round pays planning + codegen compilation `rounds` times (measured
-    * 6.6 s for the 25-vertex gate as DataFrame rounds, even with
-    * rebaseRows flattening lineage), while the RDD loop's per-round job
-    * is tens of ms. Nothing scale-relevant is lost: `reduceByKey` is
-    * map-side combining like a partial aggregate, the neighbor-count
-    * join runs co-partitioned against the pre-partitioned symmetric edge
-    * RDD (narrow on the |E| side), and all arithmetic is exact longs.
-    * Per-round state is persisted and the predecessor freed, the Pregel
-    * discipline. */
-  private def louvainLocalMoving(canon: DataFrame, rounds: Int): DataFrame = {
-    val spark = canon.sparkSession
-    import spark.implicits._
-    def trackRdd[T](r: RDD[T]): RDD[T] = {
-      val p = r.persist(StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.PipelineCaches.onClear(p)(_.unpersist(blocking = false))
-      p
-    }
-    // persisted: self (via strength) and cross (via symByB) each branch
-    // off this RDD, and unpersisted each branch re-executed the whole
-    // upstream canonical-edge DataFrame chain (distinct shuffle included)
-    val canonRdd = trackRdd(
-      canon.select("a", "b", "w").as[(Long, Long, Long)].rdd)
-    // scale-adaptive round partitioning (guide §2): size to the edge
-    // count, not the core count — every local-moving round schedules
-    // tasks per partition over several co-partitioned joins, and the old
-    // min(inputParts, defaultParallelism) put 32 partitions under a
-    // 25-vertex gate fixture. The count doubles as the persist's
-    // materializing action; at ≥50k edges/partition the cap is the old
-    // value and scale behavior is unchanged.
-    val parts = math.max(1, math.min(
-      math.min(math.max(1, canonRdd.getNumPartitions),
-        spark.sparkContext.defaultParallelism),
-      (canonRdd.count() / 50000L + 1L).toInt))
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val self = canonRdd.filter(t => t._1 == t._2).map(t => (t._1, t._3))
-    val cross = canonRdd.filter(t => t._1 != t._2)
+    * 6.6 s for the 25-vertex gate as DataFrame rounds, even with the
+    * plan re-based to a fresh scan every round), while the RDD loop's
+    * per-round job is tens of ms. Nothing scale-relevant is lost:
+    * `reduceByKey` is map-side combining like a partial aggregate, the
+    * neighbor-count join runs co-partitioned against the pre-partitioned
+    * symmetric edge RDD (narrow on the |E| side), and all arithmetic is
+    * exact longs. */
+  private def louvainLocalMoving(canon: RDD[(Long, Long, Long)],
+      d: Rounds): RDD[(Long, Long)] = {
+    val part = d.part
+    val self = canon.filter(t => t._1 == t._2).map(t => (t._1, t._3))
+    val cross = canon.filter(t => t._1 != t._2)
     // keyed by the NEIGHBOR endpoint so each round's label join is narrow
     val symByB = trackRdd(cross
       .flatMap(t => Seq((t._2, (t._1, t._3)), (t._1, (t._2, t._3))))
@@ -1842,11 +1712,10 @@ object GraphAlgorithms {
       .union(self.mapValues(_ * 2L))
       .reduceByKey(part, _ + _))
     val totW2 = strength.map(_._2).fold(0L)(_ + _)
-    var labels = trackRdd(strength
+    var (labels, _) = d.materialize(strength
       .map { case (id, _) => (id, id) }.partitionBy(part))
-    labels.count()
-    var t = 1
-    while (t <= rounds) {
+    while (d.next()) {
+      val t = d.rounds
       val prev = labels
       // k(i,c): weight from i into each neighbor community
       val cnt = symByB.join(prev)
@@ -1877,15 +1746,13 @@ object GraphAlgorithms {
         if (x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)) x else y)
       // bit staggering: only ids with bit (t-1)%64 clear may move
       val bit = (t - 1) % 64
-      labels = trackRdd(best.join(prev, part).map {
+      labels = d.materialize(best.join(prev, part).map {
         case (id, ((_, bestc), curc)) =>
           (id, if (((id >> bit) & 1L) == 0L) bestc else curc)
-      }.partitionBy(part))
-      labels.count()
-      prev.unpersist(blocking = false)
-      t += 1
+      }.partitionBy(part))._1
+      d.release(prev)
     }
-    labels.toDF("id", "c")
+    labels
   }
 
   /** In/out degree per vertex from the edge list (pure DataFrame op). */

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.graftprobe.CacheProbe
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.graph.GraphAlgorithms
 import graft.pipeline.{Dedup, PipelineCaches, Similarity}
 
 /** Round-7 regression guard: `PipelineCaches.clear()` must release every
@@ -64,6 +65,29 @@ class CacheHygieneSpec extends AnyFunSuite {
       "clear() should release only pipeline-tracked caches")
     mine.unpersist(blocking = true)
     assert(CacheProbe.isEmpty(spark))
+  }
+
+  test("clear() releases every RDD the graph round loops persisted") {
+    PipelineCaches.clear(blocking = true)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val g = new GraftSession(spark)
+    g.registerTable("hn", (1L to 6L).map(i => (i, s"v$i")).toDF("id", "name"))
+    // a 3-cycle, a 2-cycle behind a one-way bridge, and a pendant
+    g.registerTable("HE", Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+        (4L, 5L), (5L, 4L), (5L, 6L)).toDF("from_H", "to_H"))
+    g.registerNode("H", "hn", "id")
+    g.registerRel("HE", "HE", "H", "H")
+    GraphAlgorithms.kCore(g, "HE", k = 2).collect()
+    GraphAlgorithms.louvain(g, "HE", levels = 2).collect()
+    GraphAlgorithms.stronglyConnectedComponents(g, "HE").collect()
+    val created = sc.getPersistentRDDs.keySet -- before
+    assert(created.nonEmpty,
+      "precondition: the round loops should have persisted their state")
+    PipelineCaches.clear(blocking = true)
+    assert(PipelineCaches.trackedCount == 0)
+    val left = sc.getPersistentRDDs.keySet.intersect(created)
+    assert(left.isEmpty, s"RDDs still persisted after clear(): $left")
   }
 
   test("entryCount tracks cache/uncache") {

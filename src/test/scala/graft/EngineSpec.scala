@@ -1360,6 +1360,64 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("adjacency memo: an index built from the replaced edge table is not served") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    // the reader must read the OLD edge table, then insert its memo entry
+    // AFTER a CREATE has replaced the table and dropped the entry. The
+    // index build persists its frame, and persisting plans the query,
+    // which asks the relation for its scan: an armed scan parks the
+    // reader there until the CREATE has finished.
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val parked = new CountDownLatch(1)
+    val resume = new CountDownLatch(1)
+    val edges = new BaseRelation with TableScan {
+      def sqlContext = spark.sqlContext
+      def schema = StructType(Seq(StructField("from_User", LongType),
+        StructField("to_User", LongType), StructField("since", IntegerType)))
+      def buildScan(): org.apache.spark.rdd.RDD[Row] = {
+        if (armed.compareAndSet(true, false)) {
+          parked.countDown()
+          resume.await(60, TimeUnit.SECONDS)
+        }
+        spark.sparkContext.parallelize(
+          Seq(Row(1L, 2L, 2019), Row(2L, 3L, 2021)), 1)
+      }
+    }
+    val g = new GraftSession(spark)
+    g.registerTable("musers",
+      Seq((1L, "u1"), (2L, "u2"), (3L, "u3")).toDF("id", "name"))
+    g.registerTable("MFollows", spark.baseRelationToDataFrame(edges))
+    g.registerNode("User", "musers", "id")
+    g.registerRel("MFollows", "MFollows", "User", "User", adjIndex = true)
+    def outOf3(): Set[Long] = g.adjIndex("MFollows", outgoing = true)
+      .filter($"id" === 3L)
+      .select(org.apache.spark.sql.functions.explode($"neighbors"))
+      .as[Long].collect().toSet
+    armed.set(true)
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val reader = pool.submit(new Runnable {
+        def run(): Unit = g.adjIndex("MFollows", outgoing = true)
+      })
+      assert(parked.await(60, TimeUnit.SECONDS),
+        "the reader never reached the edge scan")
+      withWrites {
+        g.cypher("CREATE (:User {id: 3})-[:MFollows {since: 2024}]->(:User {id: 1});")
+      }
+      resume.countDown()
+      reader.get(60, TimeUnit.SECONDS)
+      // the entry the reader inserted was built from the pre-CREATE table
+      assert(outOf3() == Set(1L))
+    } finally {
+      resume.countDown()
+      pool.shutdownNow()
+    }
+  }
+
   test("CREATE multi-pattern atomicity: a late pattern's error applies nothing") {
     val g = writeGs()
     withWrites {

@@ -246,7 +246,29 @@ class GraphSpec extends AnyFunSuite {
     assert(GraphAlgorithms.lastKCoreRounds.get() == 4)
     // k above the max degree peels everything
     assert(GraphAlgorithms.kCore(g, "KE", k = 4).count() == 0)
+    // a 100-vertex path peels two vertices per round from its ends: 50
+    // rounds empty it and the 51st detects stability. Every round is a
+    // materialized RDD round, so the depth must cost time, not stack
+    g.registerTable("pn", (1L to 100L).map(i => (i, s"v$i")).toDF("id", "name"))
+    g.registerTable("PE", (1L until 100L).map(i => (i, i + 1))
+      .toDF("from_P", "to_P"))
+    g.registerNode("P", "pn", "id")
+    g.registerRel("PE", "PE", "P", "P")
+    assert(GraphAlgorithms.kCore(g, "PE", k = 2, maxRounds = 60).count() == 0)
+    assert(GraphAlgorithms.lastKCoreRounds.get() == 51)
+    graft.pipeline.PipelineCaches.clear()
   }
+
+  /** kCore(k) membership against the coreness >= k set, k = 1..4. The
+    * peel budget covers the chain fixture's 29-round one-ended cascade
+    * (the default 20 rounds stops short of it by contract). */
+  private def assertCoresMatch(g: GraftSession, rel: String,
+      coreness: Map[Long, Long]): Unit =
+    for (k <- 1 to 4) {
+      val core = GraphAlgorithms.kCore(g, rel, k = k, maxRounds = 40)
+        .collect().map(_.getLong(0)).toSet
+      assert(core == coreness.filter(_._2 >= k).keySet, s"k = $k")
+    }
 
   test("core numbers: hand-checked K4 + tail + pendant") {
     import spark.implicits._
@@ -262,11 +284,9 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       5L -> 1L, 6L -> 1L))
-    // consistency with kCore membership: the 3-core is exactly the
-    // coreness->=3 set
-    val core3 = GraphAlgorithms.kCore(g, "COE", k = 3)
-      .collect().map(_.getLong(0)).toSet
-    assert(core3 == got.filter(_._2 >= 3L).keySet)
+    // consistency with kCore membership: every k-core is exactly the
+    // coreness->=k set
+    assertCoresMatch(g, "COE", got)
   }
 
   test("core numbers: chain cascade converges; cap and budget behave") {
@@ -289,6 +309,7 @@ class GraphSpec extends AnyFunSuite {
     // every pure path vertex: coreness 1
     assert((30L to 33L).forall(got(_) == 3L))
     assert((1L to 29L).forall(got(_) == 1L))
+    assertCoresMatch(g, "CCE", got)
     // the refinement erodes the path one layer per round from each end:
     // hand-derivable round count is ~|path|/2, well under the budget
     val rounds = GraphAlgorithms.lastCorenessRounds.get()
